@@ -2,55 +2,80 @@
 
 The fixpoint generalization of the reference's one-hop gene-ID merge map
 (``eid = goid2goid.get(eid, eid)``, normalize.py:89-95,591-592) — SURVEY
-§2.3 J6. Implemented as the alternating **large-star / small-star**
-algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) entirely in DataFrame ops:
+§2.3 J6. Cluster id = min member id (lexicographic, so stable and
+deterministic). Two paths, chosen by a size gate measured at run time:
 
-- large-star: for each node u, connect every *strictly larger* neighbor to
-  u's minimum neighborhood node (incl. u);
-- small-star: connect every neighbor <= u (and u) to the minimum.
+- **local** (canonical edge set <= ``LOCAL_MAX_EDGES`` rows): one bounded
+  action, ``limit(LOCAL_MAX_EDGES + 1)``, both measures the edge count and
+  fetches the edges; a union-find on the driver labels the nodes and the
+  labels come back as a broadcast relation. The clustering graph is
+  vocabulary-sized (distinct surfaces + oid anchors), so at the sizes the
+  reference itself serves this is the only path taken. On the
+  benchmark's graphs (95 and ~1k edges) it runs 2 Spark jobs, the
+  canonical dedup's shuffle and the fetch, where the star rounds ran 35-36.
+- **star** (larger graphs): the alternating large-star / small-star
+  algorithm (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC'14) entirely in DataFrame ops:
 
-Each round is a groupBy-shuffle on node id; convergence when the edge set
-stops changing. Per-iteration ``localCheckpoint`` truncates lineage so
-plans don't grow across iterations (SURVEY §7 hard part e); the driver
-loop is the only imperative control flow in the engine.
+  - large-star: for each node u, connect every *strictly larger* neighbor
+    to u's minimum neighborhood node (incl. u);
+  - small-star: connect every neighbor <= u (and u) to the minimum.
 
-Node ids are arbitrary strings; ordering is lexicographic, which is stable
-and deterministic — cluster id = min member id.
+  Each round is a groupBy-shuffle on node id; convergence when the edge
+  set stops changing. Per-iteration ``localCheckpoint`` truncates lineage
+  so plans don't grow across iterations (SURVEY §7 hard part e).
+
+Both paths read the same checkpointed canonical edge set, so a graph over
+the bound is deduplicated once, not once for the gate and again for the
+rounds.
 """
 
 from __future__ import annotations
 
 import warnings
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Driver-side bound of the local path, in canonical edges (self-loops
+# included). Pipeline node ids are ``s:<etype>:<surface>`` /
+# ``oid:<etype>:<oid>`` strings of ~20-40 bytes. Measured on 200k edges of
+# 36-38-byte ids (200k nodes): the union-find over the collected rows
+# peaks at 93 MB of Python heap (tracemalloc) and the labels table is
+# 14 MB; at the worst case of 400k distinct nodes both about double. That
+# is small against the 8 GB driver heap ``get_spark`` sets and the 1 GB
+# default ``spark.driver.maxResultSize``.
+LOCAL_MAX_EDGES = 200_000
 
 
-def _canonical_undirected(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates()
+def _canonical_undirected(edges: DataFrame, keep_loops: bool = False) -> DataFrame:
+    """Distinct (src <= dst) edges; with ``keep_loops`` the self-loops stay
+    as (n, n) rows, so the endpoints are exactly the node set. A null
+    endpoint is ignored (``least``/``greatest`` skip nulls)."""
+    e = edges.select(
+        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
     )
+    e = e.where(F.col("src").isNotNull()) if keep_loops else e.where(F.col("src") != F.col("dst"))
+    return e.dropDuplicates()
 
 
 def _sig_h_col() -> F.Column:
     """Order-insensitive edge-set hash aggregate — THE convergence
     signature expression, used both by the in-memory signature scan and
     as the durable stage's write-pass metric. One definition: if the two
-    ever diverged, equal edge sets would never compare equal under
-    checkpoint_every > 1 and every durable run would silently burn
-    max_iter iterations."""
+    ever diverged, equal edge sets would never compare equal across
+    paths and every durable run would silently burn max_iter
+    iterations."""
     return F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)"))
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     """One large-star (large=True) or small-star round.
 
-    Input/output: canonical undirected edge list (src < dst).
+    Input: canonical edge list (src <= dst; self-loops tolerated).
+    Output: canonical undirected edge list (src < dst).
 
     Fully relational — no ``collect_set``: materializing a node's whole
     neighborhood as one array puts a high-degree node (a popular oid
@@ -82,45 +107,71 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     return _canonical_undirected(out)
 
 
+def _local_labels(edges) -> pa.Table:
+    """(node, cluster_id) of every endpoint of the (src, dst) rows
+    ``edges`` by union-find on the driver. Each root is the minimum of its
+    tree (the larger root is always attached under the smaller), so the
+    root is the cluster id."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for s, d in edges:
+        parent.setdefault(s, s)
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            parent[max(rs, rd)] = min(rs, rd)
+    return pa.table({"node": list(parent), "cluster_id": [find(n) for n in parent]})
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    checkpoint_every: int = 1,
     lineage_store=None,
     fingerprint: str | None = None,
     stage_prefix: str = "cc",
-    broadcast_labels_max_edges: int = 200_000,
 ) -> DataFrame:
     """Return (node, cluster_id) with cluster_id = min node id in component.
 
     ``edges``: DataFrame with string columns (src, dst). Self-loops and
-    duplicates tolerated.
+    duplicates tolerated; a node with only self-loops labels itself.
 
-    ``checkpoint_every`` must be >= 1: each star round references its
-    input along ~4 plan branches, so without periodic lineage truncation
-    the logical plan grows ~16x PER ITERATION and the driver dies on plan
-    analysis long before any data-size limit — there is no valid
-    "never checkpoint" mode for this algorithm.
+    **Size gate.** The canonical edge set (src <= dst, deduplicated,
+    self-loops kept) is checkpointed, then one ``limit(LOCAL_MAX_EDGES + 1)``
+    fetch both measures and transfers it. If it fits, the components are
+    solved on the driver by union-find and returned as a
+    ``F.broadcast``-hinted local relation: downstream the labels join the
+    corpus-sized mentions, and a relation measured to be small should not
+    pay for partitioned execution. The bound is set by driver memory (see
+    ``LOCAL_MAX_EDGES``), not by speed: on a 4-core box, ``local[4]``, a
+    199k-edge graph (800 components of 250 nodes) took 10.1 s and 7 jobs
+    on the local path against 55.0 s and 129 jobs on the star path, both
+    timed through a count of the labels.
+
+    Over the bound, the star rounds run (``max_iter`` caps them; a
+    non-converged run warns and may return partially merged labels). No
+    hint is attached there: at that size AQE stays free to choose the join
+    (the pipeline.py contract).
 
     ``lineage_store`` (a ``bern_spark.lineage.LineageStore``) makes the
-    iteration checkpoints DURABLE: each checkpointed edge set lands as a
-    parquet stage ``{stage_prefix}_iter_NNN`` keyed by ``fingerprint``,
-    so a driver killed mid-fixpoint (CC on 10^8 surface nodes runs
-    minutes of iterations) resumes by fast-forwarding through completed
-    iterations — per completed iteration the replay cost is one manifest
-    read plus one signature aggregate over the stage parquet, never a
+    checkpoints DURABLE: the canonical edge set lands as the parquet stage
+    ``{stage_prefix}_init`` and, on the star path, each iteration's edge
+    set as ``{stage_prefix}_iter_NNN``, keyed by ``fingerprint``, so a
+    driver killed mid-fixpoint (CC on 10^8 surface nodes runs minutes of
+    iterations) resumes by fast-forwarding through completed iterations —
+    per completed iteration the replay cost is one manifest read, never a
     star-round recompute. ``fingerprint`` is REQUIRED with a store and
-    must identify the edge set and CC config (resolve_entities passes
-    its pipeline fingerprint; the stage names carry the iteration
-    index). Without a store, checkpoints are in-memory localCheckpoints
-    (single-process lifetime), exactly as before.
+    must identify the edge set and CC config (resolve_entities passes its
+    pipeline fingerprint). Without a store, checkpoints are in-memory
+    localCheckpoints (single-process lifetime).
     """
-    if checkpoint_every < 1:
-        raise ValueError(
-            "checkpoint_every must be >= 1: the star-round plan tree grows "
-            "~16x per iteration without lineage truncation (driver OOM on "
-            "plan analysis)"
-        )
     if lineage_store is not None and fingerprint is None:
         raise ValueError(
             "lineage_store requires a fingerprint identifying the edge set "
@@ -130,9 +181,7 @@ def connected_components(
     spark = edges.sparkSession
 
     if lineage_store is not None:
-        def _ckpt(df: DataFrame, tag: str, eager: bool = True) -> DataFrame:
-            # ``eager`` is the in-memory path's knob; a durable stage is
-            # always materialized by its write pass
+        def _ckpt(df: DataFrame, tag: str) -> DataFrame:
             # run_stage: computes+writes once, reads back on resume with
             # a matching fingerprint — the read-back is a fresh parquet
             # scan, so it is lineage-truncated exactly like a checkpoint.
@@ -154,36 +203,39 @@ def connected_components(
                 return (str(man["rows"]), m["sig_h"])
             return None  # pre-metrics manifest: caller scans instead
     else:
-        def _ckpt(df: DataFrame, tag: str, eager: bool = False) -> DataFrame:
-            # LAZY by default (round-7): every in-memory checkpoint here
-            # is immediately followed by the _sig aggregate, so the
-            # signature action materializes the checkpoint blocks in the
-            # SAME job — an eager checkpoint ran a separate
-            # materialization job per iteration for nothing. Call sites
-            # that unpersist predecessors WITHOUT an intervening action
-            # (the deferred-release exit path) pass eager=True: a lazy
-            # checkpoint still needs its predecessors' blocks until first
-            # materialization.
-            return df.localCheckpoint(eager=eager)
+        def _ckpt(df: DataFrame, tag: str) -> DataFrame:
+            # lazy: every in-memory checkpoint here is immediately
+            # followed by an action (the bounded fetch or the _sig
+            # aggregate) that materializes its blocks in the SAME job; an
+            # eager checkpoint would run a separate job for nothing
+            return df.localCheckpoint(eager=False)
 
         def _stage_sig(tag: str):
             return None
 
+    # localCheckpoint only (no Dataset-level persist first): a persist()
+    # before it would ALSO register the pre-checkpoint plan in the
+    # CacheManager — an entry the rebind orphans, leaking one full
+    # edge-set cache per checkpoint for the session lifetime
+    e = _ckpt(_canonical_undirected(edges, keep_loops=True), "init")
+    # collect(), not toArrow(): a limited collect scans partitions
+    # incrementally and stops at LOCAL_MAX_EDGES + 1 rows, where toArrow()
+    # would shuffle up to that many rows out of EVERY partition of a large set
+    head = e.limit(LOCAL_MAX_EDGES + 1).collect()
+    if len(head) <= LOCAL_MAX_EDGES:
+        t = e.schema["src"].dataType
+        schema = T.StructType([T.StructField("node", t), T.StructField("cluster_id", t)])
+        return F.broadcast(spark.createDataFrame(_local_labels(head), schema=schema))
+
     # NOT persisted: no action inside this function ever materializes the
     # node relation (it is consumed only by the caller's first action on
-    # the returned labels), so the old persist()+unpersist() pair filled
-    # nothing and merely registered/unregistered cache entries (round-7).
+    # the returned labels), so a persist()+unpersist() pair fills nothing.
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
+        .dropna()
         .dropDuplicates()
     )
-    # localCheckpoint only (no Dataset-level persist first): an eager
-    # checkpoint materializes its own RDD blocks, and a persist() before
-    # it would ALSO register the pre-checkpoint plan in the CacheManager
-    # — an entry the rebind orphans, leaking one full edge-set cache per
-    # checkpoint for the session lifetime (code-review r4)
-    e = _ckpt(_canonical_undirected(edges), "init")
 
     def _sig(df: DataFrame):
         # one aggregate job: (row count, order-insensitive xxhash sum) —
@@ -197,78 +249,32 @@ def connected_components(
         ).collect()[0]
         return (str(r["n"]), str(r["h"]))
 
+    # the init set keeps self-loops and every round drops them, so a graph
+    # with self-loops that is already a star converges one round later
     sig = _stage_sig("init") or _sig(e)
-    n_init_edges = int(sig[0])
     converged = False
-    prev_e = e
-    # Predecessors a cache-only successor may still need for recompute:
-    # a localCheckpoint'd DataFrame stores its checkpoint data IN its
-    # cached blocks, so unpersisting one while a merely-persist()'d
-    # successor still depends on it makes the successor unrecoverable
-    # after block loss (lineage is truncated at the checkpoint). Releases
-    # are therefore deferred until the CURRENT edge set has itself been
-    # checkpointed — with the default checkpoint_every=1 that is every
-    # iteration (no behavior change).
-    pending: list[DataFrame] = []
     for i in range(max_iter):
         # the relational star round reads its input twice (min-aggregate
         # branch + join branch), so cache the large-star intermediate or
         # the small round would recompute it along both branches
         mid = _star_round(e, large=True).persist()
-        e2 = _star_round(mid, large=False)
-        checkpointed = i % checkpoint_every == 0
-        if checkpointed:
-            # no persist first (see the initial checkpoint above): the
-            # eager checkpoint reads `mid` (persisted) once and stores
-            # its own blocks; a pre-checkpoint cache entry would leak
-            e2 = _ckpt(e2, f"iter_{i:03d}")
-        else:
-            # persist BEFORE the signature action so e2 materializes into
-            # cache while mid is still persisted; mid can then be released
-            # without the next iteration recomputing it along both star
-            # branches (recompute only recurs on cache eviction)
-            e2 = e2.persist()
-        # checkpointed durable iterations read the signature from the
-        # manifest (computed in the stage's write pass) — no second scan;
-        # in-memory / non-checkpoint iterations run the aggregate (which
-        # also materializes e2's cache)
-        sig2 = (_stage_sig(f"iter_{i:03d}") if checkpointed else None) or _sig(e2)
+        # no persist first (see the initial checkpoint above): the
+        # checkpoint reads `mid` (persisted) once and stores its own
+        # blocks; a pre-checkpoint cache entry would leak
+        e2 = _ckpt(_star_round(mid, large=False), f"iter_{i:03d}")
+        # durable iterations read the signature from the manifest
+        # (computed in the stage's write pass) — no second scan; in-memory
+        # iterations run the aggregate, which also materializes e2
+        sig2 = _stage_sig(f"iter_{i:03d}") or _sig(e2)
         mid.unpersist()
-        if prev_e is not e2:
-            pending.append(prev_e)
-        if checkpointed:
-            # e2's blocks are now self-contained checkpoint data: every
-            # earlier edge set is unreachable from its (truncated) lineage
-            for p in pending:
-                if p is not e2:
-                    p.unpersist()
-            pending = []
-        prev_e = e = e2
+        # e2's blocks are now self-contained checkpoint data: the earlier
+        # edge set is unreachable from its (truncated) lineage
+        e.unpersist()
+        e = e2
         if sig2 == sig:
             converged = True
             break
         sig = sig2
-    if pending:
-        # loop exited on a non-checkpoint iteration (convergence or
-        # max_iter with checkpoint_every > 1): checkpoint the final edge
-        # set so the deferred predecessors can be released without
-        # breaking its recompute chain — otherwise up to
-        # checkpoint_every-1 full edge-set caches leak past the call.
-        # The pre-checkpoint cache entry of the final set is released
-        # too (the checkpoint blocks are self-contained once eager
-        # materialization returns), or the final set would be stored
-        # twice for the session lifetime. The durable stage name carries
-        # the iteration index it closed at: a bare "final" would be
-        # STALE-served when the same fingerprint re-runs with a raised
-        # max_iter and converges later (iter_NNN stages are
-        # deterministic given fingerprint+index; a fixed "final" is not
-        # deterministic given the fingerprint alone).
-        old_e = e
-        e = _ckpt(e, f"final_i{i:03d}", eager=True)
-        old_e.unpersist()
-        for p in pending:
-            p.unpersist()
-        pending = []
     if not converged:
         # returning silently would yield partially merged clusters
         warnings.warn(
@@ -289,17 +295,4 @@ def connected_components(
     # a root node itself may not appear as dst; coalesce covers it. But a
     # node appearing as dst under two roots cannot happen post-convergence;
     # guard with min() for determinism anyway.
-    out = out.groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))
-    # Runtime-informed join hint (guide §3.1 — broadcast the side you
-    # KNOW is small): labels rows <= nodes <= 2 x initial canonical
-    # edges, and the init signature already measured that count for
-    # free. Downstream the labels relation joins back against the
-    # corpus-sized mentions, but its plan leaf is a checkpoint RDD with
-    # UNKNOWN stats, so the planner assumes huge and plans a sort-merge
-    # (AQE only demotes it after the mentions side's map stage has
-    # already shuffled). The hint fires only when the measured graph is
-    # small; at 10^8-surface scale n_init_edges is large, no hint is
-    # attached, and AQE stays free to choose (the pipeline.py contract).
-    if n_init_edges <= broadcast_labels_max_edges:
-        out = F.broadcast(out)
-    return out
+    return out.groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))

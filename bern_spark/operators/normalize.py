@@ -177,7 +177,9 @@ def _tagged_dict(dicts: dict[str, DataFrame]) -> DataFrame:
     keys cannot collide across branches. Per (tag, key) the min() dedup
     reproduces _bcast_lookup's first-wins determinism."""
     def tag(df: DataFrame, t: str, key_expr, prio: int) -> DataFrame:
-        return df.select(
+        # a null oid is no hit: struct ordering puts it FIRST, so kept it
+        # would shadow a real oid of the same or a later-priority dict
+        return df.where(F.col("oid").isNotNull()).select(
             F.concat(F.lit(t), key_expr(F.col("name"))).alias("join_key"),
             F.lit(prio).alias("_prio"),
             "oid",

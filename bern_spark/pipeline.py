@@ -31,7 +31,7 @@ from bern_spark.operators.scoring import score_pairs
 # Bump when stage semantics change: part of the lineage fingerprint, so a
 # resumed store never replays stage parquet written by incompatible code
 # (the reference's hash-named temp files, server.py:384-396, made explicit).
-PIPELINE_VERSION = "6"  # bumped when stage OUTPUTS change, not just tokens
+PIPELINE_VERSION = "7"  # bumped when stage OUTPUTS change, not just tokens
 # (v6: the blocking-stage MinHash seed capture fix — operators/blocking.py
 # _perm_min — changed LSH candidate sets; a v5 store must not resume with
 # pre-fix stage parquet. v5: plan tokens render via non-verbose treeString.)
@@ -513,11 +513,13 @@ def resolve_entities(
     # broadcast-able join afterwards. (Mention-level edges would make CC
     # corpus-sized for zero information gain: a mention connects only
     # through its surface.)
-    # with a lineage store the CC iterations themselves checkpoint to
-    # durable stages (cc_iter_NNN, keyed by the run fingerprint): a
-    # driver killed mid-fixpoint fast-forwards through completed
-    # iterations on restart instead of redoing them (north-rule
-    # resumability for the one loop that runs minutes at 10^8 nodes)
+    # Below cc.LOCAL_MAX_EDGES canonical edges the components are solved
+    # on the driver and come back as a broadcast relation. Above it, with
+    # a lineage store the star-round iterations checkpoint to durable
+    # stages (cc_iter_NNN, keyed by the run fingerprint): a driver killed
+    # mid-fixpoint fast-forwards through completed iterations on restart
+    # instead of redoing them (north-rule resumability for the one loop
+    # that runs minutes at 10^8 nodes)
     surf_labels = connected_components(
         edges,
         max_iter=cfg.max_cc_iter,
@@ -527,8 +529,9 @@ def resolve_entities(
         F.col("node").alias("_snode"), F.col("cluster_id").alias("_scluster")
     )
 
-    # no explicit broadcast hint: vocab-sized here, but at 10^8 distinct
-    # surfaces AQE must be free to pick a shuffle join from runtime stats
+    # no hint of our own: connected_components broadcast-hints the labels
+    # only when it measured them small; at 10^8 distinct surfaces AQE
+    # must be free to pick a shuffle join from runtime stats
     clustered = normalized.withColumn("_snode", snode(F.col("mention"))).join(
         surf_labels, "_snode", "left"
     )

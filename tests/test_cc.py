@@ -1,26 +1,85 @@
-"""Connected components: chains, cycles, stars, determinism."""
+"""Connected components: both paths of the size gate (driver union-find and
+star rounds) against each other and a pure-Python reference; star-round
+skew safety and shuffle budget; max_iter exhaustion; durable iteration
+stages and resume; job counts."""
 
+from contextlib import contextmanager, nullcontext
+from unittest import mock
+
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from bern_spark.operators import cc
 from bern_spark.operators.cc import connected_components
 
 
-def _cc(spark, edges, **kw):
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    return {r.node: r.cluster_id for r in connected_components(df, **kw).collect()}
+@contextmanager
+def star_path():
+    """Force the star rounds: every graph is over a bound of 0 edges."""
+    with mock.patch.object(cc, "LOCAL_MAX_EDGES", 0):
+        yield
+
+
+def _labels(df):
+    return {r.node: r.cluster_id for r in df.collect()}
+
+
+def _is_local(df):
+    """The local path returns a broadcast-hinted relation; the star path
+    attaches no hint."""
+    return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+
+
+def _both(spark, edges, **kw):
+    """Labels from the local path and the star path, asserted equal. An
+    empty graph is within any bound, so it never reaches the star path."""
+    df = spark.createDataFrame(edges, "src string, dst string")
+    local = connected_components(df, **kw)
+    assert _is_local(local)
+    with star_path():
+        star = connected_components(df, **kw)
+    assert _is_local(star) == (not edges)
+    got = _labels(local)
+    assert _labels(star) == got
+    return got
+
+
+def _reference(edges):
+    """Pure-Python components by breadth-first search; label = min member."""
+    adj = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
+        adj.setdefault(d, set()).add(s)
+    out = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for v in adj[todo.pop()]:
+                if v not in comp:
+                    comp.add(v)
+                    todo.append(v)
+        root = min(comp)
+        out.update(dict.fromkeys(comp, root))
+    return out
 
 
 def test_chain(spark):
-    got = _cc(spark, [("b", "a"), ("c", "b"), ("d", "c")])
+    got = _both(spark, [("b", "a"), ("c", "b"), ("d", "c")])
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
 
 
 def test_cycle_and_self_loop(spark):
-    got = _cc(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("z", "z")])
+    got = _both(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("z", "z")])
     assert got["a"] == got["b"] == got["c"] == "a"
     assert got["z"] == "z"
 
 
 def test_two_components(spark):
-    got = _cc(spark, [("a", "b"), ("x", "y")])
+    got = _both(spark, [("a", "b"), ("x", "y")])
     assert got["a"] == got["b"] == "a"
     assert got["x"] == got["y"] == "x"
 
@@ -28,11 +87,212 @@ def test_two_components(spark):
 def test_star_and_long_path(spark):
     edges = [("hub", f"leaf{i}") for i in range(20)]
     edges += [(f"p{i}", f"p{i+1}") for i in range(12)]
-    got = _cc(spark, edges)
+    got = _both(spark, edges)
     assert all(got[f"leaf{i}"] == "hub" for i in range(20))
     assert len({got[f"p{i}"] for i in range(13)}) == 1
 
 
 def test_determinism(spark):
     edges = [("b", "a"), ("c", "b"), ("d", "a"), ("x", "y"), ("y", "z")]
-    assert _cc(spark, edges) == _cc(spark, list(reversed(edges)))
+    assert _both(spark, edges) == _both(spark, list(reversed(edges)))
+
+
+def test_empty_edge_set(spark):
+    assert _both(spark, []) == {}
+
+
+# ---------------------------------------------------------------------------
+# property: local path == star path == pure-Python reference
+# ---------------------------------------------------------------------------
+
+_IDS = ["a", "b", "c", "d", "e", "f", "é", "É", "字", "中文", "😀", "x:y", "oid:gene:1"]
+
+
+@st.composite
+def _graphs(draw):
+    """Random edges over a small id pool (unicode included, so duplicates,
+    both orientations and self-loops are frequent), plus isolated pairs
+    and a long path in shuffled orientation."""
+    node = st.sampled_from(_IDS)
+    edges = draw(st.lists(st.tuples(node, node), max_size=12))
+    edges += draw(st.lists(st.sampled_from(edges), max_size=4)) if edges else []
+    for k in range(draw(st.integers(0, 3))):
+        edges.append((f"iso{k}a", f"iso{k}b"))
+    n = draw(st.integers(0, 24))
+    flips = draw(st.lists(st.booleans(), min_size=n, max_size=n))
+    path = [(f"p{i:02d}", f"p{i+1:02d}") for i in range(n)]
+    edges += [(d, s) if f else (s, d) for (s, d), f in zip(path, flips)]
+    return draw(st.permutations(edges))
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(_graphs())
+@example([("a", "a"), ("a", "b"), ("b", "a"), ("a", "b")])  # loop, dup, both orientations
+@example([("😀", "字"), ("é", "É"), ("x:y", "x:y")])  # unicode, loop-only node
+@example([(f"p{i:02d}", f"p{i+1:02d}") for i in range(30)][::-1])  # long path
+def test_local_star_and_reference_agree(spark, edges):
+    assert _both(spark, edges) == _reference(edges)
+
+
+# ---------------------------------------------------------------------------
+# size gate: job counts and the broadcast relation
+# ---------------------------------------------------------------------------
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_local_path_is_two_jobs_and_a_broadcast(spark):
+    from bern_spark.entry_queries import CC_EDGES
+
+    edges = spark.createDataFrame(CC_EDGES, ["src", "dst"]).localCheckpoint()
+    out = {}
+    # the canonical dedup's shuffle and the bounded fetch; nothing else
+    assert _jobs(spark, "cc_local", lambda: out.update(df=connected_components(edges))) <= 2
+    plan = out["df"]._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" in plan and "broadcast" in plan, plan
+    assert _labels(out["df"]) == _reference(CC_EDGES)
+
+
+def test_gate_counts_self_loops_and_duplicates_once(spark):
+    # 3 raw rows, 2 canonical edges: (a, b) twice in both orientations and
+    # the self-loop (c, c); a bound of 2 keeps the local path
+    df = spark.createDataFrame([("a", "b"), ("b", "a"), ("c", "c")], ["src", "dst"])
+    with mock.patch.object(cc, "LOCAL_MAX_EDGES", 2):
+        out = connected_components(df)
+    assert _is_local(out)
+    assert _labels(out) == {"a": "a", "b": "a", "c": "c"}
+    with mock.patch.object(cc, "LOCAL_MAX_EDGES", 1):
+        assert not _is_local(connected_components(df))
+
+
+# ---------------------------------------------------------------------------
+# star rounds: skew safety, convergence warning
+# ---------------------------------------------------------------------------
+
+
+def test_cc_high_degree_hub(spark):
+    # one node of degree 100k: must complete without materializing the
+    # neighborhood as a single array row
+    edges = spark.range(100_000).select(
+        F.lit("hub").alias("src"), F.concat(F.lit("n"), F.col("id")).alias("dst")
+    )
+    for path in ("local", "star"):
+        with star_path() if path == "star" else nullcontext():
+            labels = connected_components(edges)
+            agg = labels.agg(
+                F.countDistinct("cluster_id").alias("k"), F.count("*").alias("n")
+            ).collect()[0]
+        assert agg["k"] == 1 and agg["n"] == 100_001, path
+
+
+def test_cc_warns_on_max_iter_exhaustion(spark):
+    path = spark.createDataFrame(
+        [(f"p{i:02d}", f"p{i+1:02d}") for i in range(40)], ["src", "dst"]
+    )
+    with star_path(), pytest.warns(RuntimeWarning, match="max_iter"):
+        connected_components(path, max_iter=1).collect()
+
+
+# ---------------------------------------------------------------------------
+# Durable CC iteration checkpoints (north-rule mid-fixpoint resumability)
+# ---------------------------------------------------------------------------
+
+
+def test_cc_durable_iterations_and_fast_forward(spark, tmp_path):
+    """With a LineageStore, every star-round iteration checkpoint lands as
+    a durable stage keyed by fingerprint: labels match the in-memory path
+    bit-for-bit, a rerun with the same fingerprint fast-forwards (no
+    stage rewrite — manifest timestamps unchanged), and a fingerprint
+    drift recomputes."""
+    from bern_spark.entry_queries import CC_EDGES
+    from bern_spark.lineage import LineageStore
+
+    edges = spark.createDataFrame(CC_EDGES, ["src", "dst"])
+    ref = {(r["node"], r["cluster_id"]) for r in connected_components(edges).collect()}
+
+    store = LineageStore(str(tmp_path / "cc"))
+    with pytest.raises(ValueError):
+        connected_components(edges, lineage_store=store)  # fingerprint required
+    with star_path():
+        a = {
+            (r["node"], r["cluster_id"])
+            for r in connected_components(
+                edges, lineage_store=store, fingerprint="f1"
+            ).collect()
+        }
+        assert a == ref
+        init_man = store.read_manifest("cc_init")
+        it0_man = store.read_manifest("cc_iter_000")
+        assert init_man["status"] == "complete" and it0_man["status"] == "complete"
+
+        # same fingerprint -> fast-forward: stages are read, never rewritten
+        b = {
+            (r["node"], r["cluster_id"])
+            for r in connected_components(
+                edges, lineage_store=store, fingerprint="f1"
+            ).collect()
+        }
+        assert b == ref
+        assert store.read_manifest("cc_iter_000")["ts"] == it0_man["ts"]
+
+        # fingerprint drift (different edge set claim) -> recompute
+        c = connected_components(edges, lineage_store=store, fingerprint="f2")
+        assert {(r["node"], r["cluster_id"]) for r in c.collect()} == ref
+        assert store.read_manifest("cc_iter_000")["ts"] != it0_man["ts"]
+
+
+def test_cc_local_path_with_store_writes_no_iterations(spark, tmp_path):
+    """Under the bound, a store holds the canonical edge set (so a graph
+    over the bound would not be deduplicated twice) and no star-round
+    iteration stage."""
+    from bern_spark.entry_queries import CC_EDGES
+    from bern_spark.lineage import LineageStore
+
+    edges = spark.createDataFrame(CC_EDGES, ["src", "dst"])
+    store = LineageStore(str(tmp_path / "cc"))
+    got = _labels(connected_components(edges, lineage_store=store, fingerprint="f"))
+    assert got == _reference(CC_EDGES)
+    assert store.read_manifest("cc_init")["status"] == "complete"
+    assert store.read_manifest("cc_iter_000") is None
+
+
+def test_resolve_entities_cc_stages_in_lineage(spark, tmp_path):
+    """The pipeline threads its fingerprint into CC when a lineage store
+    is present: on the star path cc_iter stages appear beside the
+    positional stages, and the resumed pipeline still produces identical
+    labels."""
+    from bern_spark.datagen import generate, to_spark
+    from bern_spark.lineage import LineageStore
+    from bern_spark.pipeline import resolve_entities
+
+    dfs = to_spark(spark, generate(n_convs=12))
+    dd = {k: dfs[k] for k in dfs if k.startswith(("dict_", "meta_"))}
+    store = LineageStore(str(tmp_path / "lin"))
+    with star_path():
+        res = resolve_entities(
+            dfs["transcripts"], dfs["lexicon"], dd, id_merge=dfs["id_merge"],
+            lineage_store=store,
+        )
+        labels1 = {(r["node"], r["cluster_id"]) for r in res["labels"].collect()}
+        assert store.read_manifest("cc_init")["status"] == "complete"
+        assert store.read_manifest("cc_iter_000")["status"] == "complete"
+        # resume into a fresh process-equivalent: same store, same inputs
+        res2 = resolve_entities(
+            dfs["transcripts"], dfs["lexicon"], dd, id_merge=dfs["id_merge"],
+            lineage_store=LineageStore(str(tmp_path / "lin")),
+        )
+        labels2 = {(r["node"], r["cluster_id"]) for r in res2["labels"].collect()}
+    assert labels1 == labels2

@@ -98,3 +98,30 @@ def test_normalize_all_routes_and_cuiless_ratio(spark, dfs, dicts):
     assert got["whatever"] == "CUI-less"  # unknown etype passthrough
     ratios = {r.etype: r.cuiless_ratio for r in N.cuiless_ratio(out).collect()}
     assert ratios["pathway"] == 1.0
+
+
+def test_normalize_all_null_oid_never_shadows_a_hit(spark):
+    # a dictionary row with a null oid is no hit: it must neither shadow a
+    # real oid for the same name in the same dict nor stop the gene
+    # cascade from reaching a later-priority dict
+    schema = "oid string, name string"
+    empty = spark.createDataFrame([], schema)
+    dicts = {
+        "dict_drug": spark.createDataFrame([(None, "aspirin"), ("D1", "aspirin")], schema),
+        "dict_species": empty,
+        "dict_mutation": empty,
+        "dict_disease": empty,
+        "dict_gene": spark.createDataFrame([(None, "TP53"), ("672", "BRCA1")], schema),
+        "dict_gene_oldbest": spark.createDataFrame([("7157", "TP53")], schema),
+        "dict_gene_freq": empty,
+    }
+    m = _mentions(spark, [("Aspirin", "drug"), ("TP53", "gene"), ("BRCA1", "gene")])
+    got = _collect(N.normalize_all(m, dicts))
+    assert got == {"Aspirin": "D1", "TP53": "7157", "BRCA1": "672"}
+    genes = m.where(F.col("etype") == "gene")
+    branch = _collect(
+        N.normalize_gene(
+            genes, dicts["dict_gene"], dicts["dict_gene_oldbest"], dicts["dict_gene_freq"]
+        )
+    )
+    assert branch == {"TP53": "7157", "BRCA1": "672"}

@@ -79,3 +79,21 @@ def test_mention_count_conservation(result):
     # A2 analog: every extracted mention survives normalization exactly once
     m = result["mentions"]
     assert m.groupBy("etype", "mention_id").count().where(F.col("count") > 1).count() == 0
+
+
+def test_resolve_entities_job_count(spark, dfs, dicts):
+    """One call plus forcing its outputs runs at most 35 Spark jobs on this
+    fixture (34-35 measured with 4 and 8 cores). The star-round CC alone
+    used to add ~50 more: a regression in the job floor fails here."""
+    sc = spark.sparkContext
+    sc.setJobGroup("resolve_job_count", "resolve_job_count")
+    try:
+        res = resolve_entities(
+            dfs["transcripts"], dfs["lexicon"], dicts, id_merge=dfs["id_merge"]
+        )
+        for k in ("mentions", "annotations", "labels"):
+            res[k].write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup("", "")
+    n = len(sc.statusTracker().getJobIdsForGroup("resolve_job_count"))
+    assert n <= 35, n

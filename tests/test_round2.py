@@ -6,12 +6,11 @@ import datetime
 import pickle
 import re
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# connected components: skew safety + convergence warning
+# connected components: star-round skew safety
 # ---------------------------------------------------------------------------
 
 
@@ -24,31 +23,6 @@ def test_cc_star_round_has_no_wide_row_aggregate(spark):
     for large in (True, False):
         plan = _star_round(e, large=large)._jdf.queryExecution().optimizedPlan().toString()
         assert "collect_set" not in plan and "collect_list" not in plan
-
-
-def test_cc_high_degree_hub(spark):
-    # one node of degree 100k: must complete without materializing the
-    # neighborhood as a single array row
-    from bern_spark.operators.cc import connected_components
-
-    edges = spark.range(100_000).select(
-        F.lit("hub").alias("src"), F.concat(F.lit("n"), F.col("id")).alias("dst")
-    )
-    labels = connected_components(edges)
-    agg = labels.agg(
-        F.countDistinct("cluster_id").alias("k"), F.count("*").alias("n")
-    ).collect()[0]
-    assert agg["k"] == 1 and agg["n"] == 100_001
-
-
-def test_cc_warns_on_max_iter_exhaustion(spark):
-    from bern_spark.operators.cc import connected_components
-
-    path = spark.createDataFrame(
-        [(f"p{i:02d}", f"p{i+1:02d}") for i in range(40)], ["src", "dst"]
-    )
-    with pytest.warns(RuntimeWarning, match="max_iter"):
-        connected_components(path, max_iter=1).collect()
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Round-4 hardening: fingerprint plan-sensitivity, CC unpersist safety,
+"""Round-4 hardening: fingerprint plan-sensitivity,
 remote retry/refetch + CRLF, JPEG/WAV decode, TFRecord fs contract,
 P3 model-input cap, er_pipeline wall budget."""
 
@@ -106,38 +106,6 @@ def test_plan_token_distinguishes_wide_projections(spark, tmp_path):
     a = spark.read.parquet(p).select(*cols[:28])   # differ only at
     b = spark.read.parquet(p).select(*cols[:29])   # position 28 > 25
     assert _input_token(a) != _input_token(b)
-
-
-# ---------------------------------------------------------------------------
-# CC: non-default checkpoint_every must not release blocks a cache-only
-# successor still needs (ADVICE r3) — correctness under both settings
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("every", [2, 3, 5])
-def test_cc_correct_with_non_default_checkpointing(spark, every):
-    from bern_spark.operators.cc import connected_components
-
-    # path graph a-b-c-d-e plus isolated pair x-y: needs several rounds
-    edges = spark.createDataFrame(
-        [("b", "a"), ("c", "b"), ("d", "c"), ("e", "d"), ("y", "x")],
-        ["src", "dst"],
-    )
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(edges, checkpoint_every=every).collect()
-    }
-    assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "x": "x", "y": "x"}
-
-
-def test_cc_rejects_never_checkpoint(spark):
-    """checkpoint_every=0 would grow the star-round plan ~16x/iteration
-    (driver OOM on plan analysis): rejected up front."""
-    from bern_spark.operators.cc import connected_components
-
-    edges = spark.createDataFrame([("b", "a")], ["src", "dst"])
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        connected_components(edges, checkpoint_every=0)
 
 
 # ---------------------------------------------------------------------------

@@ -682,109 +682,8 @@ def test_pack_documents_single_exchange(spark):
 
 
 # ---------------------------------------------------------------------------
-# Durable CC iteration checkpoints (north-rule mid-fixpoint resumability)
+# PIPELINE_VERSION invalidation
 # ---------------------------------------------------------------------------
-
-
-def test_cc_durable_iterations_and_fast_forward(spark, tmp_path):
-    """With a LineageStore, every CC iteration checkpoint lands as a
-    durable stage keyed by fingerprint: labels match the in-memory path
-    bit-for-bit, a rerun with the same fingerprint fast-forwards (no
-    stage rewrite — manifest timestamps unchanged), and a fingerprint
-    drift recomputes."""
-    from bern_spark.entry_queries import CC_EDGES
-    from bern_spark.lineage import LineageStore
-    from bern_spark.operators.cc import connected_components
-
-    edges = spark.createDataFrame(CC_EDGES, ["src", "dst"])
-    ref = {(r["node"], r["cluster_id"]) for r in connected_components(edges).collect()}
-
-    store = LineageStore(str(tmp_path / "cc"))
-    with pytest.raises(ValueError):
-        connected_components(edges, lineage_store=store)  # fingerprint required
-    a = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components(
-            edges, lineage_store=store, fingerprint="f1"
-        ).collect()
-    }
-    assert a == ref
-    init_man = store.read_manifest("cc_init")
-    it0_man = store.read_manifest("cc_iter_000")
-    assert init_man["status"] == "complete" and it0_man["status"] == "complete"
-
-    # same fingerprint -> fast-forward: stages are read, never rewritten
-    b = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components(
-            edges, lineage_store=store, fingerprint="f1"
-        ).collect()
-    }
-    assert b == ref
-    assert store.read_manifest("cc_iter_000")["ts"] == it0_man["ts"]
-
-    # fingerprint drift (different edge set claim) -> recompute
-    c = connected_components(edges, lineage_store=store, fingerprint="f2")
-    assert {(r["node"], r["cluster_id"]) for r in c.collect()} == ref
-    assert store.read_manifest("cc_iter_000")["ts"] != it0_man["ts"]
-
-
-def test_cc_final_stage_not_stale_on_raised_max_iter(spark, tmp_path):
-    """An exhausted run (max_iter too low, checkpoint_every > 1) writes
-    a final stage; re-running with a raised max_iter and the SAME
-    fingerprint must NOT serve that less-converged edge set — the final
-    stage name carries the iteration it closed at."""
-    import warnings as _w
-
-    from bern_spark.entry_queries import CC_EDGES
-    from bern_spark.lineage import LineageStore
-    from bern_spark.operators.cc import connected_components
-
-    edges = spark.createDataFrame(CC_EDGES, ["src", "dst"])
-    ref = {(r["node"], r["cluster_id"]) for r in connected_components(edges).collect()}
-    store = LineageStore(str(tmp_path / "cc"))
-    with _w.catch_warnings():
-        _w.simplefilter("ignore", RuntimeWarning)  # expected: exhausted
-        partial = connected_components(
-            edges, max_iter=1, checkpoint_every=2,
-            lineage_store=store, fingerprint="f",
-        ).collect()
-    assert len(partial) > 0  # ran, under-merged or not
-    full = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components(
-            edges, max_iter=25, checkpoint_every=2,
-            lineage_store=store, fingerprint="f",
-        ).collect()
-    }
-    assert full == ref  # NOT the exhausted run's final edge set
-
-
-def test_resolve_entities_cc_stages_in_lineage(spark, tmp_path):
-    """The pipeline threads its fingerprint into CC when a lineage store
-    is present: cc_iter stages appear beside the positional stages, and
-    the resumed pipeline still produces identical labels."""
-    from bern_spark.datagen import generate, to_spark
-    from bern_spark.lineage import LineageStore
-    from bern_spark.pipeline import resolve_entities
-
-    dfs = to_spark(spark, generate(n_convs=12))
-    dd = {k: dfs[k] for k in dfs if k.startswith(("dict_", "meta_"))}
-    store = LineageStore(str(tmp_path / "lin"))
-    res = resolve_entities(
-        dfs["transcripts"], dfs["lexicon"], dd, id_merge=dfs["id_merge"],
-        lineage_store=store,
-    )
-    labels1 = {(r["node"], r["cluster_id"]) for r in res["labels"].collect()}
-    assert store.read_manifest("cc_init")["status"] == "complete"
-    assert store.read_manifest("cc_iter_000")["status"] == "complete"
-    # resume into a fresh process-equivalent: same store, same inputs
-    res2 = resolve_entities(
-        dfs["transcripts"], dfs["lexicon"], dd, id_merge=dfs["id_merge"],
-        lineage_store=LineageStore(str(tmp_path / "lin")),
-    )
-    labels2 = {(r["node"], r["cluster_id"]) for r in res2["labels"].collect()}
-    assert labels1 == labels2
 
 
 def test_pipeline_version_bumped_for_minhash_seed_fix():
