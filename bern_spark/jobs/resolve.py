@@ -44,7 +44,10 @@ Outputs
 <output>/annotations   per-turn canonical text + sorted denotations
 
 With --lineage-dir, every stage is a durable parquet stage table with a
-manifest — a resubmitted job resumes from the last completed stage.
+manifest — a resubmitted job resumes from the last completed stage. The
+extract stage is then split into --extract-buckets buckets (default 8)
+written by 4 sub-jobs, so a job killed mid-extract resumes at the last
+completed sub-job rather than redoing the stage.
 """
 
 from __future__ import annotations
@@ -89,7 +92,6 @@ def build_parser() -> argparse.ArgumentParser:
         "+0.6%% of the 30M-turn extract wall at 8 buckets, BENCH.md r5 — "
         "vs hours of lost work on a crash at 10^12 turns), else 0.",
     )
-    p.add_argument("--extract-progress-jobs", type=int, default=4)
     return p
 
 
@@ -135,7 +137,6 @@ def main(argv: list[str] | None = None) -> None:
         use_lsh=not args.no_lsh,
         use_embedding_cosine=args.embedding_cosine,
         extract_buckets=args.extract_buckets,
-        extract_progress_jobs=args.extract_progress_jobs,
     )
     res = resolve_entities(
         transcripts, lexicon, dicts, id_merge=id_merge, config=cfg, lineage_store=store

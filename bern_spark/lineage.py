@@ -15,17 +15,22 @@ materialized through a ``LineageStore`` with the same two properties:
   makes re-runs read-through (idempotent restarts) — but ONLY while the
   fingerprint still matches; a changed fingerprint invalidates the stage
   instead of silently returning stale parquet.
-- ``run_bucketed_stage``: hash-bucketed incremental execution — input rows
-  are assigned to ``n_buckets`` by a deterministic key; remaining buckets
-  run as ``progress_jobs`` bucket-partitioned sub-jobs (dynamic partition
-  overwrite keeps finished buckets intact), with the manifest updated
-  after each sub-job. Resume granularity is therefore
-  ``n_buckets / progress_jobs`` buckets: a preemption costs at most the
-  in-flight sub-job, never completed sub-jobs. The tradeoff is explicit —
-  each sub-job re-scans the input to filter its buckets (``_bucket`` is a
-  computed column, so the filter cannot push down), so ``progress_jobs``
-  trades input scans for resume granularity; set it to 1 for
-  scan-once/no-intermediate-progress, higher when preemption is likely.
+- bucketed stages: one resume protocol, two sources of buckets. Input
+  rows fall into ``n_buckets`` deterministic buckets; the remaining
+  buckets run as ``progress_jobs`` sub-jobs whose output is written
+  ``partitionBy(_bucket)`` under dynamic partition overwrite (finished
+  buckets stay intact), with the manifest updated after each sub-job.
+  A preemption therefore costs at most the in-flight sub-job. A manifest
+  whose layout marker, ``n_buckets`` or fingerprint differs is stale:
+  its directory is removed and the stage restarts from zero buckets.
+
+  - ``run_bucketed_stage``: buckets are ``pmod(hash(bucket_cols), n)``.
+    Works on any relation, but each sub-job rescans the input to filter
+    its buckets (the bucket is computed, so the filter cannot push
+    down): ``progress_jobs`` trades input scans for resume granularity.
+  - ``run_file_bucketed_stage``: buckets are groups of the input's
+    FILES, and each sub-job reads only its own files — one input pass
+    in total. Only for row-local transforms over a bare file scan.
 
 All metadata is plain JSON on the filesystem the output lives on (on a
 real cluster: the object store next to the Iceberg tables).
@@ -175,7 +180,7 @@ class LineageStore:
         self._write_manifest(stage, payload)
         return spark.read.parquet(path)
 
-    # -- file-bucketed incremental stage -----------------------------------
+    # -- bucketed incremental stages ---------------------------------------
 
     def run_file_bucketed_stage(
         self,
@@ -188,14 +193,14 @@ class LineageStore:
         fingerprint: str | None = None,
         files: list[str] | None = None,
     ) -> DataFrame:
-        """Incremental stage for PER-ROW transforms over a bare file scan:
+        """Bucketed stage for PER-ROW transforms over a bare file scan:
         buckets are groups of input FILES (deterministic name hash) and
         each sub-job READS ONLY its buckets' files — unlike
-        :meth:`run_bucketed_stage`, whose computed ``_bucket`` filter
-        cannot push down and therefore rescans the full input once per
-        sub-job (measured +28% on the 30M-turn extract at
-        ``progress_jobs=4``). Here total scan cost across all sub-jobs is
-        one pass, so resume granularity is ~free.
+        :meth:`run_bucketed_stage`, whose computed bucket filter cannot
+        push down and therefore rescans the full input once per sub-job
+        (measured +28% on the 30M-turn extract at ``progress_jobs=4``).
+        Here total scan cost across all sub-jobs is one pass, so resume
+        granularity is ~free.
 
         Caller contract (enforced by the pipeline, not checkable here):
         ``transform_fn`` must be row-local — rows co-bucket by file, not
@@ -209,13 +214,12 @@ class LineageStore:
         plan-leaf inspection before routing here (see
         ``resolve_entities``). Bucket->file assignment is stable across
         driver restarts (crc32 of the file path), and the fingerprint
-        carries the input identity, so resume never mixes file sets."""
+        carries the input identity, so resume never mixes file sets.
+        ``files``: a listing the caller already paid for; None lists
+        ``input_df`` here."""
         import zlib
         from functools import reduce
 
-        # the caller (resolve_entities) already listed the files to gate
-        # the route — accept that listing instead of paying a second
-        # O(files) driver walk; None keeps this method self-sufficient
         if files is None:
             files = sorted(input_df.inputFiles())
         if not files:
@@ -223,81 +227,34 @@ class LineageStore:
                 "run_file_bucketed_stage requires file-backed input; use "
                 "run_bucketed_stage (hash buckets) for in-memory relations"
             )
-        man = self.read_manifest(stage)
-        if man is not None and (
-            man.get("layout") != f"{_BUCKET_LAYOUT}-files"
-            or man.get("n_buckets") != n_buckets
-            or (fingerprint is not None and man.get("fingerprint") != fingerprint)
-        ):
-            man = None
-        path = self._dpath(stage)
-        if man is None and os.path.exists(path):
-            shutil.rmtree(path)  # see run_bucketed_stage: stale-dir hazard
-        if man is None:
-            man = {
-                "status": "in_progress",
-                "stage": stage,
-                "layout": f"{_BUCKET_LAYOUT}-files",
-                "n_buckets": n_buckets,
-                "fingerprint": fingerprint,
-                "done_buckets": [],
-            }
-        if man.get("status") == "complete":
-            return spark.read.parquet(path)
-        done = set(man.get("done_buckets", []))
-        remaining = [b for b in range(n_buckets) if b not in done]
-
         bucket_files: dict[int, list[str]] = {b: [] for b in range(n_buckets)}
         for f in files:
             bucket_files[zlib.crc32(f.encode()) % n_buckets].append(f)
         schema = input_df.schema
-        n_jobs = max(1, min(progress_jobs, len(remaining)))
-        chunks = [remaining[i::n_jobs] for i in range(n_jobs)]
+
         # Deliberately NO scan-split-size tuning here: shrinking
         # spark.sql.files.maxPartitionBytes so each bucket's scan yields
         # >= cores partitions (to skip the transform's parallelism-floor
         # repartition) was A/B-measured at the 30M-turn corpus and LOST —
-        # stage wall +21% (mean 255.5s tuned vs 211.9s untuned,
-        # .scratch/fb_tune_ab.json): Arrow-UDF scans pay per-task worker
-        # batch-pipeline setup, so many small scan tasks cost more than
-        # the one narrow repartition shuffle they avoid.
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        t0 = time.time()
-        rows_by = _chunk_rows_map(man)
-        try:
-            for chunk in chunks:
-                parts = [
-                    transform_fn(
-                        spark.read.schema(schema).parquet(*bucket_files[b])
-                    ).withColumn("_bucket", F.lit(b))
-                    for b in chunk
-                    if bucket_files[b]
-                ]
-                if parts:
-                    out = reduce(lambda x, y: x.unionByName(y), parts)
-                    obs = Observation(f"lineage_{stage}_{next(_obs_counter)}")
-                    out.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                        "overwrite"
-                    ).partitionBy("_bucket").parquet(path)
-                    # keyed (not accumulated): a crash between the parquet
-                    # write and this manifest write re-runs the chunk, and
-                    # a re-recorded key overwrites instead of double-counting
-                    rows_by[_chunk_key(chunk)] = int(obs.get["rows"])
-                    man["rows_done"] = sum(rows_by.values())
-                done.update(chunk)  # file-less buckets complete trivially
-                man["done_buckets"] = sorted(done)
-                self._write_manifest(stage, man)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        man["status"] = "complete"
-        man["rows"] = man.get("rows_done", 0)
-        man["wall_sec"] = round(time.time() - t0, 3)
-        man["ts"] = time.time()
-        self._write_manifest(stage, man)
-        return spark.read.parquet(path)
+        # stage wall +21% (mean 255.5s tuned vs 211.9s untuned): Arrow-UDF
+        # scans pay per-task worker batch-pipeline setup, so many small
+        # scan tasks cost more than the one narrow repartition shuffle
+        # they avoid.
+        def read_chunk(chunk):
+            parts = [
+                transform_fn(
+                    spark.read.schema(schema).parquet(*bucket_files[b])
+                ).withColumn("_bucket", F.lit(b))
+                for b in chunk
+                if bucket_files[b]
+            ]
+            # file-less buckets complete trivially
+            return reduce(DataFrame.unionByName, parts) if parts else None
 
-    # -- bucketed incremental stage ----------------------------------------
+        return self._run_bucketed(
+            spark, stage, f"{_BUCKET_LAYOUT}-files", n_buckets, progress_jobs,
+            fingerprint, read_chunk,
+        )
 
     def run_bucketed_stage(
         self,
@@ -310,45 +267,72 @@ class LineageStore:
         progress_jobs: int = 4,
         fingerprint: str | None = None,
     ) -> DataFrame:
-        """Process ``input_df`` in deterministic hash buckets; resume skips
-        completed buckets. ``transform_fn(df)`` must be keyed within
+        """Bucketed stage over deterministic hash buckets of
+        ``bucket_cols``. ``transform_fn(df)`` must be keyed within
         ``bucket_cols`` groups (no cross-bucket joins — any group keyed by
         ``bucket_cols`` lands in exactly one bucket by construction) and
-        preserve the ``_bucket`` column it receives.
+        keep ``bucket_cols`` unchanged in its output: the store derives
+        ``_bucket`` from them on the OUTPUT, so the transform never sees
+        or carries the bucket column."""
+        bucket = F.pmod(F.hash(*bucket_cols), F.lit(n_buckets))
+
+        def read_chunk(chunk):
+            return transform_fn(input_df.where(bucket.isin(chunk))).withColumn(
+                "_bucket", bucket
+            )
+
+        return self._run_bucketed(
+            spark, stage, _BUCKET_LAYOUT, n_buckets, progress_jobs, fingerprint,
+            read_chunk,
+        )
+
+    def _run_bucketed(
+        self,
+        spark: SparkSession,
+        stage: str,
+        layout: str,
+        n_buckets: int,
+        progress_jobs: int,
+        fingerprint: str | None,
+        read_chunk,
+    ) -> DataFrame:
+        """The resume protocol both bucketed stages share.
+        ``read_chunk(buckets)`` returns the stage output of those buckets
+        with a ``_bucket`` column, or None when they hold no input.
 
         Remaining buckets run as ``min(progress_jobs, remaining)``
-        bucket-partitioned Spark sub-jobs with ``partitionBy(_bucket)``
-        dynamic-overwrite output; the manifest's ``done_buckets`` is
-        updated after EACH sub-job, so a preemption costs at most one
-        in-flight sub-job (in-job task failures remain Spark's own retry
-        domain). Completed buckets' directories are untouched — dynamic
-        mode only replaces partitions present in the written data.
+        sub-jobs with ``partitionBy(_bucket)`` dynamic-overwrite output;
+        the manifest's ``done_buckets`` is updated after EACH sub-job, so
+        a preemption costs at most one in-flight sub-job (in-job task
+        failures remain Spark's own retry domain). Completed buckets'
+        directories are untouched — dynamic mode only replaces partitions
+        present in the written data.
 
-        Manifests from the pre-``_bucket=`` layout (no ``layout`` marker)
-        or with a different ``n_buckets``/``fingerprint`` are stale: the
-        stage restarts from zero buckets rather than resuming against
-        incompatible output."""
+        A manifest with a different ``layout`` marker (including none:
+        pre-``_bucket=`` code), ``n_buckets`` or ``fingerprint`` is
+        stale: the stage restarts from zero buckets rather than resuming
+        against incompatible output."""
         man = self.read_manifest(stage)
         if man is not None and (
-            man.get("layout") != _BUCKET_LAYOUT
+            man.get("layout") != layout
             or man.get("n_buckets") != n_buckets
             or (fingerprint is not None and man.get("fingerprint") != fingerprint)
         ):
-            man = None  # incompatible prior run: restart from scratch
+            man = None
         path = self._dpath(stage)
-        if man is None and os.path.exists(path):
-            # restart-from-scratch MUST clear prior output: dynamic
-            # partition overwrite only replaces partitions present in the
-            # newly written data, so a stale ``_bucket=N`` dir from an
-            # invalidated/um-manifested run would survive (and duplicate
-            # or resurrect rows) whenever the new run writes fewer or
-            # different buckets
-            shutil.rmtree(path)
         if man is None:
+            if os.path.exists(path):
+                # restart-from-scratch MUST clear prior output: dynamic
+                # partition overwrite only replaces partitions present in
+                # the newly written data, so a stale ``_bucket=N`` dir
+                # from an invalidated run would survive (and duplicate or
+                # resurrect rows) whenever the new run writes fewer or
+                # different buckets
+                shutil.rmtree(path)
             man = {
                 "status": "in_progress",
                 "stage": stage,
-                "layout": _BUCKET_LAYOUT,
+                "layout": layout,
                 "n_buckets": n_buckets,
                 "fingerprint": fingerprint,
                 "done_buckets": [],
@@ -357,10 +341,6 @@ class LineageStore:
             return spark.read.parquet(path)
         done = set(man.get("done_buckets", []))
         remaining = [b for b in range(n_buckets) if b not in done]
-
-        bucketed = input_df.withColumn(
-            "_bucket", F.pmod(F.hash(*bucket_cols), F.lit(n_buckets))
-        )
         n_jobs = max(1, min(progress_jobs, len(remaining)))
         chunks = [remaining[i::n_jobs] for i in range(n_jobs)]
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -369,16 +349,19 @@ class LineageStore:
         rows_by = _chunk_rows_map(man)
         try:
             for chunk in chunks:
-                part = transform_fn(bucketed.where(F.col("_bucket").isin(chunk)))
-                obs = Observation(f"lineage_{stage}_{next(_obs_counter)}")
-                part.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                    "overwrite"
-                ).partitionBy("_bucket").parquet(path)
-                # keyed (not accumulated): see run_file_bucketed_stage
-                rows_by[_chunk_key(chunk)] = int(obs.get["rows"])
+                out = read_chunk(chunk)
+                if out is not None:
+                    obs = Observation(f"lineage_{stage}_{next(_obs_counter)}")
+                    out.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                        "overwrite"
+                    ).partitionBy("_bucket").parquet(path)
+                    # keyed (not accumulated): a crash between the parquet
+                    # write and this manifest write re-runs the chunk, and
+                    # a re-recorded key overwrites instead of double-counting
+                    rows_by[_chunk_key(chunk)] = int(obs.get["rows"])
+                    man["rows_done"] = sum(rows_by.values())
                 done.update(chunk)
                 man["done_buckets"] = sorted(done)
-                man["rows_done"] = sum(rows_by.values())
                 self._write_manifest(stage, man)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)

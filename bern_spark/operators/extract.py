@@ -7,8 +7,8 @@ extracts them by dictionary n-gram matching plus regex taggers — but the
 1. tokenize with char offsets — one Arrow-batched pandas UDF per text row
    (the only Python step; mirrors CoNLL_tokenizer + input_form,
    ops.py:5,37-63,91-95, with the exclusive-end fix of SURVEY §1.2);
-2. candidate n-gram spans — pure Catalyst array expressions
-   (``transform``/``sequence``/``flatten``/``explode``), JVM codegen;
+2. candidate n-gram spans — emitted by the same UDF, only at tokens that
+   start some lexicon surface (``make_anchored_candidates_udf``);
 3. surface lookup — **broadcast hash join** against the lexicon
    (extraction analog of the J1-J3 dictionary joins);
 4. longest-match containment pruning — per-(turn, etype) self-anti-join;
@@ -133,57 +133,6 @@ def make_anchored_candidates_udf(first_tokens, max_ngram: int):
             yield batch.map(one)
 
     return cands_udf
-
-
-def candidate_spans(turns: DataFrame, max_ngram: int = MAX_NGRAM) -> DataFrame:
-    """All 1..max_ngram token-gram spans per turn, with exact text slices.
-
-    Pure Catalyst: per n, slide over the token array with
-    ``transform(sequence(...))``; flatten and explode once. No Python.
-
-    The surface slice is computed INSIDE the span struct while the text
-    still exists once per turn row — exploded candidate rows carry only
-    (offsets, surface), never the full text. Carrying text through the
-    explode made extraction memory-bandwidth-bound (measured: 1.4x
-    speedup from 4 to 16 cores; narrow rows restore compute scaling).
-    """
-    _span_t = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("start", T.IntegerType()),
-                T.StructField("end", T.IntegerType()),
-                T.StructField("surface", T.StringType()),
-            ]
-        )
-    )
-    toks = tokens_udf(F.col("text"))
-    df = turns.withColumn("_toks", toks)
-    text = F.col("text")
-
-    def mk(n):
-        def span(i):
-            start = F.element_at(F.col("_toks"), i + 1)["start"]
-            end = F.element_at(F.col("_toks"), i + n)["end"]
-            return F.struct(
-                start.alias("start"),
-                end.alias("end"),
-                text.substr(start + 1, end - start).alias("surface"),
-            )
-
-        return F.when(
-            F.size("_toks") >= n,
-            F.transform(F.sequence(F.lit(0), F.size("_toks") - n), span),
-        ).otherwise(F.array().cast(_span_t))
-
-    df = df.withColumn("_spans", F.flatten(F.array(*[mk(n) for n in range(1, max_ngram + 1)])))
-    passthrough = [c for c in turns.columns if c != "text"]
-    df = df.select(*passthrough, F.explode("_spans").alias("_s")).select(
-        *passthrough,
-        F.col("_s.start").alias("start"),
-        F.col("_s.end").alias("end"),
-        F.col("_s.surface").alias("surface"),
-    )
-    return df
 
 
 _TOK_RE_SQL = r"[0-9a-zA-Z]+|[^0-9a-zA-Z\s]"

@@ -29,6 +29,8 @@ from bern_spark.functions.keys import tmchem_key
 from bern_spark.functions.pytext import jaro_winkler, levenshtein_sim, token_jaccard
 
 EMB_DIM = 64
+# weight of the embedding cosine in the blended pair score
+COSINE_WEIGHT = 0.3
 
 
 def _hashed_embedding(s: str, dim: int = EMB_DIM) -> list[float]:
@@ -112,7 +114,6 @@ def score_pairs(
     threshold: float = 0.85,
     etype_thresholds: dict[str, float] | None = None,
     embeddings: DataFrame | None = None,
-    cosine_weight: float = 0.3,
 ) -> DataFrame:
     """Score candidate pairs; return edges above threshold.
 
@@ -124,7 +125,7 @@ def score_pairs(
     ``embeddings`` (optional): a (surface, emb) relation — e.g.
     ``hashed_surface_embeddings`` or a model's vectors. When given, the
     embedding-cosine of the pair blends into the string score with weight
-    ``cosine_weight`` (the north-star's JW/Levenshtein/embedding-cosine
+    ``COSINE_WEIGHT`` (the north-star's JW/Levenshtein/embedding-cosine
     scorer set). Joined per DISTINCT pair side, so the embedding UDF cost
     stays vocabulary-bounded; pairs whose surface lacks a vector fall
     back to the pure string blend.
@@ -168,8 +169,8 @@ def score_pairs(
                 F.when(F.col("_score") >= 1.0, F.col("_score")).otherwise(
                     F.when(
                         F.col("_cos").isNotNull(),
-                        (1.0 - cosine_weight) * F.col("_score")
-                        + cosine_weight * F.greatest(F.col("_cos"), F.lit(0.0)),
+                        (1.0 - COSINE_WEIGHT) * F.col("_score")
+                        + COSINE_WEIGHT * F.greatest(F.col("_cos"), F.lit(0.0)),
                     ).otherwise(F.col("_score"))
                 ),
             )

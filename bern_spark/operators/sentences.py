@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bern_spark.functions.pytext import sentence_spans, tokenize_with_offsets
+from bern_spark.functions.pytext import sentence_spans
 
 _SENT_TYPE = T.ArrayType(
     T.StructType(

@@ -17,15 +17,16 @@ tail). Outputs:
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bern_spark.operators.blocking import candidate_pairs, surface_nodes, with_block_keys
+from bern_spark.operators.blocking import candidate_pairs, with_block_keys
 from bern_spark.operators.cc import connected_components
 from bern_spark.operators.extract import extract_mentions
-from bern_spark.operators.normalize import CUI_LESS, attach_metadata, normalize_all
+from bern_spark.operators.normalize import CUI_LESS, normalize_all
 from bern_spark.operators.scoring import score_pairs
 
 # Bump when stage semantics change: part of the lineage fingerprint, so a
@@ -288,31 +289,25 @@ class ERConfig:
     use_lsh: bool = True
     max_cc_iter: int = 25
     # Blend embedding-cosine into the pairwise score (north-star scorer
-    # set: JW / Levenshtein / embedding-cosine). Default embeddings are
-    # the hashed-trigram vectors (scoring.hashed_surface_embeddings);
-    # computed once per distinct surface, so vocabulary-bounded.
+    # set: JW / Levenshtein / embedding-cosine) with weight
+    # scoring.COSINE_WEIGHT. Default embeddings are the hashed-trigram
+    # vectors (scoring.hashed_surface_embeddings); computed once per
+    # distinct surface, so vocabulary-bounded.
     use_embedding_cosine: bool = False
-    embedding_cosine_weight: float = 0.3
-    # Cut lineage (localCheckpoint) after each major stage. Keeps Catalyst
-    # analysis cost O(stage) instead of O(pipeline) — without this, every
-    # action re-analyzes the full compound plan and driver time dominates.
-    # At cluster scale the same boundaries become persisted stage tables
-    # (bern_spark.lineage) for resumability.
-    checkpoint_stages: bool = True
-    # Bucketed incremental EXTRACT stage (requires lineage_store): >0
-    # routes stage_01 through a resumable bucketed stage — a preemption
+    # Bucketed EXTRACT stage (lineage store only): >0 routes stage_01
+    # through a resumable bucketed stage run as 4 sub-jobs — a preemption
     # mid-extract resumes at the last completed sub-job instead of
     # restarting the stage. Extract is the one stage long enough to care
     # (89% of the 4-core wall at 300M turns, BENCH.md r4); the other
     # stages stay whole-stage run_stage. Bare-file-scan inputs take the
-    # file-bucketed path (sub-jobs read only their buckets' files — one
+    # file-bucketed route (sub-jobs read only their buckets' files — one
     # total input pass; measured +0.6% total / ~+4% stage overhead at
     # 8 buckets on the 30M bench, BENCH.md r5); other inputs take the
-    # hash-bucketed path (correct everywhere, but rescans per sub-job:
+    # hash-bucketed route (correct everywhere, but rescans per sub-job:
     # +15.7% total at 16 buckets). 0 = whole-stage extract (default).
-    # Recommended at scale: 8 with the default 4 progress jobs.
+    # Recommended at scale: 8. Without a store the stage cuts are lazy
+    # localCheckpoints and this field is ignored.
     extract_buckets: int = 0
-    extract_progress_jobs: int = 4
 
 
 def resolve_entities(
@@ -336,12 +331,21 @@ def resolve_entities(
     ``lineage_store`` (a ``bern_spark.lineage.LineageStore``) swaps the
     in-memory stage cuts for durable parquet stage tables with manifests:
     a restarted job resumes from the last completed stage (north-rule
-    resumability). Without it, stages cut lineage via localCheckpoint.
+    resumability). Without it, stages cut lineage via lazy
+    localCheckpoint. The cut policy is chosen once, here at entry.
     """
     cfg = config or ERConfig()
-    if lineage_store is not None:
+    fp = None
+    if lineage_store is None:
+        # LAZY checkpoints (round-7): the cut still truncates the logical
+        # plan immediately (analysis stays O(stage)), but materialization
+        # rides the first downstream action instead of paying a separate
+        # eager job per stage — nothing here unpersists a cut, so the
+        # lazy blocks are always reachable until computed.
+        cut = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
+    else:
         spark = transcripts.sparkSession
-        _stage_no = [0]
+        stage_names = (f"stage_{i:02d}" for i in itertools.count(1))
         # one fingerprint for the whole run: any config/input/code drift
         # invalidates every stage (positional stage names make per-stage
         # fingerprints meaningless — an upstream change shifts them all).
@@ -356,19 +360,7 @@ def resolve_entities(
         )
 
         def cut(df):
-            _stage_no[0] += 1
-            name = f"stage_{_stage_no[0]:02d}"
-            return lineage_store.run_stage(spark, name, lambda: df, fingerprint=fp)
-
-    elif cfg.checkpoint_stages:
-        # LAZY checkpoints (round-7): the cut still truncates the logical
-        # plan immediately (analysis stays O(stage)), but materialization
-        # rides the first downstream action instead of paying a separate
-        # eager job per stage — nothing here unpersists a cut, so the
-        # lazy blocks are always reachable until computed.
-        cut = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
-    else:
-        cut = lambda df: df.persist()  # noqa: E731
+            return lineage_store.run_stage(spark, next(stage_names), lambda: df, fingerprint=fp)
 
     def _build_mentions(tr: DataFrame) -> DataFrame:
         m = extract_mentions(tr, lexicon)
@@ -389,59 +381,35 @@ def resolve_entities(
                 )
         return m
 
-    if lineage_store is not None and cfg.extract_buckets > 0:
-        # Bucketed incremental extract (VERDICT r4 item 3): valid because
-        # extraction is per-turn — no cross-conv_id interaction — so any
-        # row partition can run as its own sub-job.
-        _stage_no[0] += 1
-        name = f"stage_{_stage_no[0]:02d}"
-        n_b = cfg.extract_buckets
-        # scan_files computed once above, shared with the fingerprint
-        if scan_files:
-            # file-bucketed: each sub-job reads ONLY its buckets' files —
-            # one total input pass across all sub-jobs (the hash-bucketed
-            # path below rescans per sub-job: measured +28% at 30M turns)
-            mentions = lineage_store.run_file_bucketed_stage(
-                spark,
-                name,
-                transcripts,
-                _build_mentions,
-                n_buckets=n_b,
-                progress_jobs=cfg.extract_progress_jobs,
-                fingerprint=fp,
-                files=scan_files,
-            ).drop("_bucket")
-        else:
-            # in-memory / filtered / partitioned inputs: hash buckets on
-            # conv_id; the transform recomputes _bucket from conv_id
-            # (same pmod-hash the store uses) instead of threading the
-            # column through the extractor
-            mentions = lineage_store.run_bucketed_stage(
-                spark,
-                name,
-                transcripts,
-                ["conv_id"],
-                lambda df: _build_mentions(df.drop("_bucket")).withColumn(
-                    "_bucket", F.pmod(F.hash("conv_id"), F.lit(n_b))
-                ),
-                n_buckets=n_b,
-                progress_jobs=cfg.extract_progress_jobs,
-                fingerprint=fp,
-            ).drop("_bucket")
-    elif lineage_store is not None:
-        # durable stage_01: with a store the cut is about RESUMABILITY,
-        # not reuse — keep it
-        mentions = cut(_build_mentions(transcripts))
-    else:
+    if lineage_store is None:
         # no cut: the single-pass normalize_all (round-7) consumes the
         # mentions relation exactly ONCE, so an in-memory checkpoint here
         # would buy no reuse and cost one extra materialization boundary
         # per run; extraction materializes inside the `normalized` cut
         # right below instead.
         mentions = _build_mentions(transcripts)
+    elif cfg.extract_buckets == 0:
+        # durable stage_01: with a store the cut is about RESUMABILITY,
+        # not reuse — keep it
+        mentions = cut(_build_mentions(transcripts))
+    elif scan_files:
+        # Bucketed extract (VERDICT r4 item 3): valid because extraction
+        # is per-turn — no cross-conv_id interaction — so any row
+        # partition can run as its own sub-job. File buckets: each
+        # sub-job reads ONLY its buckets' files, one total input pass
+        mentions = lineage_store.run_file_bucketed_stage(
+            spark, next(stage_names), transcripts, _build_mentions,
+            n_buckets=cfg.extract_buckets, fingerprint=fp, files=scan_files,
+        ).drop("_bucket")
+    else:
+        # in-memory / filtered / partitioned inputs: hash buckets on
+        # conv_id (rescans the input per sub-job)
+        mentions = lineage_store.run_bucketed_stage(
+            spark, next(stage_names), transcripts, ["conv_id"], _build_mentions,
+            n_buckets=cfg.extract_buckets, fingerprint=fp,
+        ).drop("_bucket")
     normalized = normalize_all(mentions, dicts)
     if mirna_dict is not None:
-        from bern_spark.operators.normalize import CUI_LESS as _CL
         from bern_spark.operators.taggers import normalize_mirna
 
         mir = normalized.where(F.col("etype") == "miRNA").drop("oid")
@@ -476,14 +444,7 @@ def resolve_entities(
         from bern_spark.operators.scoring import hashed_surface_embeddings
 
         emb = hashed_surface_embeddings(surfaces)
-    scored = cut(
-        score_pairs(
-            pairs,
-            threshold=cfg.score_threshold,
-            embeddings=emb,
-            cosine_weight=cfg.embedding_cosine_weight,
-        )
-    )
+    scored = cut(score_pairs(pairs, threshold=cfg.score_threshold, embeddings=emb))
     sim_edges = scored.select(
         snode(F.col("mention_a")).alias("src"),
         snode(F.col("mention_b")).alias("dst"),
@@ -524,7 +485,7 @@ def resolve_entities(
         edges,
         max_iter=cfg.max_cc_iter,
         lineage_store=lineage_store,
-        fingerprint=fp if lineage_store is not None else None,
+        fingerprint=fp,
     ).select(
         F.col("node").alias("_snode"), F.col("cluster_id").alias("_scluster")
     )

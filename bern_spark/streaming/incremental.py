@@ -108,15 +108,15 @@ def streaming_candidate_mentions(
 
 def foreach_batch_resolver(lexicon: DataFrame, dicts: dict[str, DataFrame], sink_fn):
     """foreachBatch callback running the FULL pipeline per micro-batch and
-    handing the mentions output to ``sink_fn(df, epoch_id)``."""
-    from bern_spark.pipeline import ERConfig, resolve_entities
+    handing the mentions output to ``sink_fn(df, epoch_id)``. Each batch
+    runs with the default in-memory cuts (lazy ``localCheckpoint``), which
+    leave nothing in the session's cache between batches."""
+    from bern_spark.pipeline import resolve_entities
 
     def _fn(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        res = resolve_entities(
-            batch_df, lexicon, dicts, config=ERConfig(checkpoint_stages=False)
-        )
+        res = resolve_entities(batch_df, lexicon, dicts)
         sink_fn(res["mentions"], epoch_id)
 
     return _fn

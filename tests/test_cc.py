@@ -296,3 +296,43 @@ def test_resolve_entities_cc_stages_in_lineage(spark, tmp_path):
         )
         labels2 = {(r["node"], r["cluster_id"]) for r in res2["labels"].collect()}
     assert labels1 == labels2
+
+
+def test_cc_star_round_has_no_wide_row_aggregate(spark):
+    from bern_spark.operators.cc import _canonical_undirected, _star_round
+
+    e = _canonical_undirected(
+        spark.createDataFrame([("a", "b"), ("b", "c")], ["src", "dst"])
+    )
+    for large in (True, False):
+        plan = _star_round(e, large=large)._jdf.queryExecution().optimizedPlan().toString()
+        assert "collect_set" not in plan and "collect_list" not in plan
+
+
+def test_cc_star_round_shuffle_budget(spark):
+    """Pin the audited per-iteration exchange budget of the relational CC
+    star rounds (large: 3 = min-agg + join-back + canonical dedup; small:
+    4 = + union branch). A future CC edit that re-widens the flagship
+    (extra shuffles, collect_set wide rows) fails here before it hits the
+    bench."""
+    import re
+
+    from bern_spark.operators.cc import _star_round
+    from bern_spark.plans import formatted_plan
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"]
+    ).localCheckpoint()
+    large = _star_round(edges, large=True)
+    p_large = formatted_plan(large)  # BEFORE execution: single plan listing
+    small = _star_round(large.localCheckpoint(), large=False)
+    p_small = formatted_plan(small)
+
+    def n_exchanges(p):
+        return len(set(re.findall(r"\((\d+)\) Exchange", p)))
+
+    assert n_exchanges(p_large) <= 3, p_large
+    assert n_exchanges(p_small) <= 4, p_small
+    for p in (p_large, p_small):
+        assert "collect_set" not in p and "CollectSet" not in p, p
+        assert "BatchEvalPython" not in p, p

@@ -1,6 +1,8 @@
 """End-to-end gate: pairwise F1 >= 0.99, golden mention parity, invariants
 (SURVEY §5 rebuild test plan; BASELINE.md targets)."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,3 +99,42 @@ def test_resolve_entities_job_count(spark, dfs, dicts):
         sc.setJobGroup("", "")
     n = len(sc.statusTracker().getJobIdsForGroup("resolve_job_count"))
     assert n <= 35, n
+
+
+def test_regex_taggers_through_pipeline(spark, dfs, dicts):
+    """The miRNA/pathway tagger branch of resolve_entities: tagged mentions
+    reach ``annotations`` (miRNA with its J11 oid), turn text is the
+    canonical input text, and every span slices its mention."""
+    ts = datetime.datetime(2024, 1, 1)
+    turns = [
+        ("r1", 0, "user", "levels of hsa-mir-21 and miR-155 rose", "calc", ts),
+        ("r1", 1, "assistant", "the MAPK pathway and notch signaling", "calc", ts),
+        ("r2", 0, "user", "let-7a is unknown here", "calc", ts),
+    ]
+    tr = spark.createDataFrame(turns, dfs["transcripts"].schema)
+    mirna = spark.createDataFrame(
+        [("MIRBASE:hsa21", "hsa-mir-21"), ("MIRBASE:mmu21", "mmu-mir-21"),
+         ("MIRBASE:hsa155", "hsa-mir-155")],
+        ["oid", "name"],
+    )
+    res = resolve_entities(
+        tr, dfs["lexicon"], dicts, mirna_dict=mirna, pathway_names=["MAPK", "notch"]
+    )
+    ann = res["annotations"].collect()
+    got = {(d.etype, d.mention, d.oid) for r in ann for d in r.denotations}
+    assert {
+        ("miRNA", "hsa-mir-21", "MIRBASE:hsa21"),
+        ("miRNA", "miR-155", "MIRBASE:hsa155"),
+        ("miRNA", "let-7a", "CUI-less"),
+        ("pathway", "MAPK pathway", "CUI-less"),
+        ("pathway", "notch", "CUI-less"),
+    } <= got
+
+    canon = {
+        (r.conv_id, r.turn_idx): r.ct
+        for r in tr.select("conv_id", "turn_idx", canonical_text("text").alias("ct")).collect()
+    }
+    assert {(r.conv_id, r.turn_idx): r.text for r in ann} == canon
+    for r in ann:
+        for d in r.denotations:
+            assert r.text[d.start:d.end] == d.mention, (r.text, d)

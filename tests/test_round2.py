@@ -1,6 +1,6 @@
-"""Round-2 coverage: skew-safe CC, Bloom anchor set, anchored streaming
-parity, embedding-cosine scoring, WordPiece (W5), force-chunking (W1),
-single-job bucketed resume, cross-shard salting bridges."""
+"""Round-2 coverage: Bloom anchor set, anchored streaming parity,
+embedding-cosine scoring, WordPiece (W5), force-chunking (W1),
+cross-shard salting bridges."""
 
 import datetime
 import pickle
@@ -8,22 +8,6 @@ import re
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# connected components: star-round skew safety
-# ---------------------------------------------------------------------------
-
-
-def test_cc_star_round_has_no_wide_row_aggregate(spark):
-    from bern_spark.operators.cc import _canonical_undirected, _star_round
-
-    e = _canonical_undirected(
-        spark.createDataFrame([("a", "b"), ("b", "c")], ["src", "dst"])
-    )
-    for large in (True, False):
-        plan = _star_round(e, large=large)._jdf.queryExecution().optimizedPlan().toString()
-        assert "collect_set" not in plan and "collect_list" not in plan
-
 
 # ---------------------------------------------------------------------------
 # Bloom-filter anchor set
@@ -312,50 +296,6 @@ def test_force_chunk_mixed_sentences():
     # default path still tiles exactly
     tiled = sentence_spans(text)
     assert "".join(text[s:e] for s, e in tiled) == text
-
-
-# ---------------------------------------------------------------------------
-# lineage: one-job bucketed remainder
-# ---------------------------------------------------------------------------
-
-
-def test_bucketed_stage_bounded_transform_invocations(spark, tmp_path):
-    """Sub-job count is min(progress_jobs, remaining buckets) — NOT one
-    job per bucket (throughput) and NOT a single job for everything
-    (which left no incremental progress to resume from, the round-2
-    ADVICE defect). progress_jobs=1 still gives the scan-once mode."""
-    import json
-    import os
-
-    from bern_spark.lineage import LineageStore
-
-    store = LineageStore(str(tmp_path))
-    inp = spark.range(400).withColumn("k", F.col("id").cast("string"))
-    calls = {"n": 0}
-
-    def transform(df):
-        calls["n"] += 1
-        return df.withColumn("out", F.length("k"))
-
-    out = store.run_bucketed_stage(
-        spark, "pb", inp, ["k"], transform, n_buckets=8, progress_jobs=1
-    )
-    assert out.count() == 400
-    assert calls["n"] == 1  # scan-once mode: all buckets in ONE job
-
-    # resume after simulated preemption: completed buckets untouched, the
-    # 5 remaining buckets run as min(progress_jobs=4, 5)=4 sub-jobs with
-    # the manifest updated between them
-    man = store.read_manifest("pb")
-    man["status"] = "in_progress"
-    man["done_buckets"] = man["done_buckets"][:3]
-    man.pop("rows_done", None)
-    with open(os.path.join(str(tmp_path), "pb.manifest.json"), "w") as f:
-        json.dump(man, f)
-    out2 = store.run_bucketed_stage(spark, "pb", inp, ["k"], transform, n_buckets=8)
-    assert calls["n"] == 1 + 4
-    assert out2.count() == 400
-    assert out2.select("id").distinct().count() == 400
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,8 @@
 """Round-5 tests, one section per VERDICT r4 / ADVICE r4 item: bench
 artifact shape guard (items 1/2/9), MP4 decode (6), composed TFRecord
 export job (5), driver-contract queries for its building blocks,
-catalog-table fingerprints (4), bucketed + file-bucketed flagship
-extract with kill-and-resume (3), the minhash plan-construction
-determinism regression that work exposed, remote-fetch exactly-once
+catalog-table fingerprints (4), the minhash plan-construction
+determinism regression the bucketed extract exposed, remote-fetch exactly-once
 hardening and politeness knobs (8 + ADVICE), and WAV truncation
 (ADVICE)."""
 
@@ -418,12 +417,6 @@ def test_export_job_spark_submit(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Bucketed flagship extract stage (VERDICT r4 item 3): mid-stage resume
-# through resolve_entities, not just the raw LineageStore API.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
 # New driver-contract queries: word_windows (oracled) + ner_framing
 # (rows-only, determinism pinned)
 # ---------------------------------------------------------------------------
@@ -536,169 +529,6 @@ def test_minhash_signature_stable_across_plan_constructions(spark):
     ]
     assert sigs[0] == sigs[1] == sigs[2]
     assert len(set(sigs[0])) > 1  # permutations genuinely differ
-
-
-def _stage01_bucket_mtimes(ldir):
-    """mtime_ns per _bucket=N directory's data files in stage_01."""
-    out = {}
-    sdir = os.path.join(ldir, "stage_01")
-    for bucket in os.listdir(sdir):
-        if not bucket.startswith("_bucket="):
-            continue
-        bdir = os.path.join(sdir, bucket)
-        out[bucket] = {
-            f: os.stat(os.path.join(bdir, f)).st_mtime_ns
-            for f in os.listdir(bdir)
-            if f.endswith(".parquet")
-        }
-    return out
-
-
-def test_flagship_bucketed_extract_kill_and_resume(spark, dfs, dicts, tmp_path):
-    """resolve_entities with extract_buckets routes stage_01 through
-    run_bucketed_stage: results bit-match the whole-stage run, and after
-    a simulated mid-stage kill (manifest rewound to 2 done buckets) the
-    resumed run leaves completed buckets' parquet UNTOUCHED on disk while
-    redoing only the rest."""
-    import json
-
-    from bern_spark.lineage import LineageStore
-    from bern_spark.pipeline import ERConfig, pairwise_f1, resolve_entities
-
-    ldir = str(tmp_path / "lineage")
-    cfg = ERConfig(extract_buckets=8, extract_progress_jobs=4)
-    res = resolve_entities(
-        dfs["transcripts"], dfs["lexicon"], dicts, id_merge=dfs["id_merge"],
-        config=cfg, lineage_store=LineageStore(ldir),
-    )
-    bucketed_mentions = res["mentions"].collect()
-    assert pairwise_f1(res["labels"], dfs["labeled_pairs"])["f1"] == 1.0
-
-    # parity with the whole-stage path
-    base = resolve_entities(
-        dfs["transcripts"], dfs["lexicon"], dicts, id_merge=dfs["id_merge"],
-        config=ERConfig(),
-    )
-    def rowkey(r):
-        return tuple(tuple(v) if isinstance(v, list) else v for v in r)
-
-    a = {rowkey(r) for r in bucketed_mentions}
-    b = {rowkey(r) for r in base["mentions"].collect()}
-    assert a == b
-
-    man_path = os.path.join(ldir, "stage_01.manifest.json")
-    with open(man_path) as f:
-        man = json.load(f)
-    assert man["layout"] == "_bucket" and len(man["done_buckets"]) == 8
-
-    # simulated preemption: two buckets done, everything else in flight
-    before = _stage01_bucket_mtimes(ldir)
-    kept = man["done_buckets"][:2]
-    man.update(status="in_progress", done_buckets=kept)
-    man.pop("rows_done", None)
-    with open(man_path, "w") as f:
-        json.dump(man, f)
-
-    res2 = resolve_entities(
-        dfs["transcripts"], dfs["lexicon"], dicts, id_merge=dfs["id_merge"],
-        config=cfg, lineage_store=LineageStore(ldir),
-    )
-    assert {rowkey(r) for r in res2["mentions"].collect()} == a  # no dupes/losses
-    after = _stage01_bucket_mtimes(ldir)
-    for k in kept:
-        key = f"_bucket={k}"
-        assert after[key] == before[key], f"completed bucket {key} was rewritten"
-    redone = [k for k in after if k not in (f"_bucket={i}" for i in kept)]
-    assert any(after[k] != before.get(k) for k in redone)
-    with open(man_path) as f:
-        assert json.load(f)["status"] == "complete"
-
-
-def test_run_file_bucketed_stage_resume_and_single_pass(spark, tmp_path):
-    """File-bucketed stage: resume skips completed buckets' FILES (their
-    parquet untouched), no dupes/losses, and buckets without files
-    complete trivially (n_buckets > n_files)."""
-    import json
-
-    from bern_spark.lineage import LineageStore
-
-    src = str(tmp_path / "src")
-    spark.range(1000).selectExpr("id", "cast(id as string) k").repartition(6).write.parquet(src)
-    store = LineageStore(str(tmp_path / "lin"))
-    inp = spark.read.parquet(src)
-
-    def transform(df):
-        from pyspark.sql import functions as F
-
-        return df.withColumn("out", F.length("k"))
-
-    out = store.run_file_bucketed_stage(
-        spark, "fb", inp, transform, n_buckets=8, progress_jobs=4
-    )
-    assert out.count() == 1000
-    man = store.read_manifest("fb")
-    assert man["layout"] == "_bucket-files" and man["status"] == "complete"
-    assert sorted(man["done_buckets"]) == list(range(8))  # incl. file-less
-    assert man["rows"] == 1000
-
-    # rewind to 2 done buckets; resume must keep them and redo the rest
-    man.update(status="in_progress", done_buckets=man["done_buckets"][:2])
-    man.pop("rows_done", None)
-    with open(os.path.join(str(tmp_path / "lin"), "fb.manifest.json"), "w") as f:
-        json.dump(man, f)
-    out2 = store.run_file_bucketed_stage(
-        spark, "fb", inp, transform, n_buckets=8, progress_jobs=4
-    )
-    assert out2.count() == 1000
-    assert out2.select("id").distinct().count() == 1000
-    assert store.read_manifest("fb")["status"] == "complete"
-
-
-def test_flagship_file_bucketed_extract_parity_and_resume(spark, dfs, dicts, tmp_path):
-    """File-backed transcripts route through run_file_bucketed_stage
-    (manifest layout marker proves it); results bit-match the in-memory
-    hash-bucketed run AND the whole-stage run; a manifest rewind resumes
-    without touching completed buckets."""
-    import json
-
-    from bern_spark.lineage import LineageStore
-    from bern_spark.pipeline import ERConfig, resolve_entities
-
-    src = str(tmp_path / "transcripts")
-    dfs["transcripts"].repartition(6).write.parquet(src)
-    tr = spark.read.parquet(src)
-    ldir = str(tmp_path / "lineage")
-    cfg = ERConfig(extract_buckets=8, extract_progress_jobs=4)
-    res = resolve_entities(
-        tr, dfs["lexicon"], dicts, id_merge=dfs["id_merge"],
-        config=cfg, lineage_store=LineageStore(ldir),
-    )
-
-    def rowkey(r):
-        return tuple(tuple(v) if isinstance(v, list) else v for v in r)
-
-    got = {rowkey(r) for r in res["mentions"].collect()}
-    man_path = os.path.join(ldir, "stage_01.manifest.json")
-    with open(man_path) as f:
-        man = json.load(f)
-    assert man["layout"] == "_bucket-files"  # file path taken, not hash
-
-    base = resolve_entities(
-        dfs["transcripts"], dfs["lexicon"], dicts, id_merge=dfs["id_merge"],
-        config=ERConfig(),
-    )
-    assert got == {rowkey(r) for r in base["mentions"].collect()}
-
-    # mid-stage kill: rewind, resume, same result
-    man.update(status="in_progress", done_buckets=man["done_buckets"][:3])
-    man.pop("rows_done", None)
-    with open(man_path, "w") as f:
-        json.dump(man, f)
-    res2 = resolve_entities(
-        tr, dfs["lexicon"], dicts, id_merge=dfs["id_merge"],
-        config=cfg, lineage_store=LineageStore(ldir),
-    )
-    assert {rowkey(r) for r in res2["mentions"].collect()} == got
 
 
 # ---------------------------------------------------------------------------

@@ -2,8 +2,7 @@
 carry-in, return_raw release contract, V1-catalog in-place rewrite
 detection, PIPELINE_VERSION invalidation), the Iceberg/Delta snapshot
 branch of the catalog fingerprint (VERDICT r5 item 1 — previously dead
-code under test), the single-listing-pass bucketed route (item 5), and
-adversarial MP4 box fuzzing (item 8)."""
+code under test), and adversarial MP4 box fuzzing (item 8)."""
 
 import os
 import struct
@@ -335,36 +334,6 @@ def test_catalog_leaf_tokens_unprovable_branches_fall_back():
     iceberg = _JLeaf(_JTable("i.t", {"current-snapshot-id": "5"}))
     bad = _JLeaf(_JTable("x.t", props=None, cls="com.example.T"))
     assert _catalog_leaf_tokens(_fake_df(iceberg, bad)) is None
-
-
-# ---------------------------------------------------------------------------
-# VERDICT r5 item 5: one listing per flagship bucketed run
-# ---------------------------------------------------------------------------
-
-
-def test_bare_file_scan_returns_listing_and_stage_accepts_it(spark, tmp_path):
-    from bern_spark.lineage import LineageStore
-    from bern_spark.pipeline import _bare_file_scan
-
-    p = str(tmp_path / "scan")
-    spark.range(100).selectExpr("id", "cast(id as string) v").repartition(4).write.parquet(p)
-    df = spark.read.parquet(p)
-    files = _bare_file_scan(df)
-    assert files == sorted(df.inputFiles())
-    # non-bare plans gate to None
-    assert _bare_file_scan(df.where("id > 3")) is None
-    assert _bare_file_scan(df.select("id")) is None
-    assert _bare_file_scan(spark.range(5)) is None
-
-    # the threaded listing is authoritative: the stage must not re-list
-    df2 = spark.read.parquet(p)
-    df2.inputFiles = lambda: (_ for _ in ()).throw(AssertionError("re-listed"))
-    store = LineageStore(str(tmp_path / "lin"))
-    out = store.run_file_bucketed_stage(
-        spark, "s01", df2, lambda d: d.selectExpr("id", "v"),
-        n_buckets=4, progress_jobs=2, fingerprint="fp", files=files,
-    )
-    assert out.count() == 100
 
 
 # ---------------------------------------------------------------------------

@@ -289,3 +289,47 @@ def test_windowed_counts_drop_late_rows(spark, tmp_path):
     w0 = [r for r in rows if r.window_start == t0]
     assert len(w0) == 1, rows
     assert w0[0].n_mentions == 1  # the late row did NOT count
+
+
+def test_foreach_batch_resolver_per_batch_and_no_cached_cuts(spark, dfs, dicts, tmp_path):
+    """Three parquet files streamed one per trigger: each micro-batch's sink
+    output equals resolve_entities on that batch, and the per-batch stage
+    cuts leave nothing in the session's CacheManager."""
+    from bern_spark.pipeline import resolve_entities
+    from bern_spark.streaming.incremental import foreach_batch_resolver
+
+    tr = dfs["transcripts"]
+    src = str(tmp_path / "src")
+    for i in range(3):
+        part = tr.where(F.abs(F.hash("conv_id")) % 3 == i)
+        part.coalesce(1).write.mode("append").parquet(src)
+
+    def rowset(rows):
+        return {tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows}
+
+    batches, sunk = {}, {}
+    resolver = foreach_batch_resolver(
+        dfs["lexicon"], dicts, lambda df, epoch: sunk.__setitem__(epoch, df.collect())
+    )
+
+    def on_batch(batch_df, epoch_id):
+        batches[epoch_id] = batch_df.collect()
+        resolver(batch_df, epoch_id)
+
+    spark.catalog.clearCache()
+    q = (
+        spark.readStream.schema(tr.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(600)
+    assert q.exception() is None
+    assert len(batches) == 3 and sorted(sunk) == sorted(batches)
+    for epoch, rows in batches.items():
+        want = resolve_entities(spark.createDataFrame(rows, tr.schema), dfs["lexicon"], dicts)
+        assert sunk[epoch] and rowset(sunk[epoch]) == rowset(want["mentions"].collect())
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
