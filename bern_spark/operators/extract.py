@@ -11,15 +11,20 @@ extracts them by dictionary n-gram matching plus regex taggers — but the
    start some lexicon surface (``make_anchored_candidates_udf``);
 3. surface lookup — **broadcast hash join** against the lexicon
    (extraction analog of the J1-J3 dictionary joins);
-4. longest-match containment pruning — per-(turn, etype) self-anti-join;
+4. longest-match containment pruning within (turn, etype) and
 5. W9 cross-type overlap resolution — window max over identical spans,
    keep-the-higher-score with ties keeping both (ops.py:232-476, tie
-   fall-through at ops.py:292-298);
-6. P5 species stoplist filter (utils.py:279-308).
+   fall-through at ops.py:292-298) — both as partition-local windows
+   behind ONE exchange by (conv_id, turn_idx): each turn's decision needs
+   only that turn's matches, so the candidate UDF runs once per turn;
+6. P5 species stoplist filter (utils.py:279-308), after W9.
 
-At 100 TB the only shuffle here is the final window (partition-local by
-(conv_id, turn_idx) which is also the natural input partitioning); the
-lexicon join is broadcast, candidate generation is embarrassingly parallel.
+At 100 TB the only shuffle here is that per-turn exchange of the lexicon
+matches (plus the input repartition when the scan is narrower than the
+cluster); the lexicon join is broadcast, candidate generation is
+embarrassingly parallel. Streaming (streaming/incremental.py) shares
+steps 1-3 and the stoplist; steps 4-5 need non-time windows, which
+unbounded streams do not support.
 """
 
 from __future__ import annotations
@@ -27,7 +32,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,8 +40,8 @@ from bern_spark.datagen import SPECIES_STOPLIST
 from bern_spark.functions.pytext import tokenize_with_offsets
 from bern_spark.functions.text import canonical_text
 
-# Default candidate n-gram ceiling; ``extract_mentions`` derives the real
-# value from the lexicon (longest surface in CoNLL tokens, capped at 8 —
+# Candidate n-gram ceiling; ``lexicon_profile`` derives the real value
+# from the lexicon (longest surface in CoNLL tokens, capped at 8 —
 # "c.1847G>T" alone is 5 tokens: c / . / 1847G / > / T).
 MAX_NGRAM = 8
 
@@ -99,7 +104,7 @@ def make_anchored_candidates_udf(first_tokens, max_ngram: int):
 
     ``first_tokens`` is anything supporting ``in``: a frozenset for
     vocabulary-sized lexicons, or a ``bern_spark.functions.bloom.
-    BloomFilter`` for huge ones (see ``anchor_set_for``). Either way it
+    BloomFilter`` for huge ones (see ``lexicon_profile``). Either way it
     ships in the UDF closure — the Python-side mirror of the broadcast
     lexicon (the reference loads its dictionaries into every normalizer
     process the same way, chemical_normalizer.py:30-40). Cuts candidate
@@ -144,111 +149,74 @@ _TOK_RE_SQL = r"[0-9a-zA-Z]+|[^0-9a-zA-Z\s]"
 ANCHOR_EXACT_LIMIT = 100_000
 
 
-def anchor_set_for(lexicon: DataFrame, exact_limit: int = ANCHOR_EXACT_LIMIT):
-    """Membership structure over the lexicon surfaces' first CoNLL tokens.
+def lexicon_profile(lexicon: DataFrame):
+    """``(anchors, max_ngram)``: the lexicon facts the candidate generator
+    needs — the membership structure over the surfaces' first CoNLL
+    tokens, and the longest surface in CoNLL tokens (capped at
+    ``MAX_NGRAM``). The regexp token classes mirror the CoNLL tokenizer.
 
-    Small vocabularies: exact frozenset via a bounded driver collect
-    (``limit(exact_limit + 1)`` caps driver memory regardless of lexicon
-    size). Beyond the limit: a Bloom filter built executor-side
-    (functions/bloom.py) — O(bits) on the driver, never the tokens.
+    Small vocabularies: an exact frozenset from ONE bounded driver
+    collect of the per-first-token aggregate. Beyond the limit: a Bloom
+    filter built executor-side (functions/bloom.py) — O(bits) on the
+    driver, never the tokens.
     """
-    ft = lexicon.select(
+    prof = lexicon.groupBy(
         F.regexp_extract("surface", _TOK_RE_SQL, 0).alias("ft")
-    ).distinct()
-    head = ft.limit(exact_limit + 1).collect()
-    if len(head) <= exact_limit:
-        return frozenset(r["ft"] for r in head)
-    from bern_spark.functions.bloom import bloom_from_rdd
-
-    n = ft.count()
-    return bloom_from_rdd(ft.rdd.map(lambda r: r[0]), n_items=n, fp_rate=0.01)
-
-
-def lexicon_max_ngram(lexicon: DataFrame, cap: int = MAX_NGRAM) -> int:
-    """Longest lexicon surface in CoNLL tokens — the candidate window the
-    extractor must generate. One tiny JVM-side aggregate (regexp token
-    count mirrors the CoNLL token classes; no Python worker spin-up)."""
-    n = lexicon.select(
-        F.max(
-            F.size(F.regexp_extract_all("surface", F.lit(r"[0-9a-zA-Z]+|[^0-9a-zA-Z\s]"), 0))
-        ).alias("n")
-    ).collect()[0]["n"]
-    return min(int(n or 1), cap)
-
-
-def lexicon_stats(lexicon: DataFrame, cap: int = MAX_NGRAM) -> tuple[int, int]:
-    """(max_ngram, max rows sharing one surface) in ONE tiny dim-sized
-    job — the two facts that let :func:`extract_mentions` skip provably
-    vacuous corpus-wide stages (round-7 optimization):
-
-    - ``max_ngram == 1``  => every candidate is a single CoNLL token;
-      tokens of one turn are disjoint spans, so no mention can strictly
-      contain another and the containment anti-join is a no-op;
-    - ``max multiplicity == 1`` => a span's surface text determines at
-      most ONE lexicon row, so no span is ever claimed twice and the W9
-      overlap window is a no-op.
-    """
-    r = (
-        lexicon.groupBy("surface")
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.max(
-                F.size(
-                    F.regexp_extract_all(
-                        "surface", F.lit(r"[0-9a-zA-Z]+|[^0-9a-zA-Z\s]"), 0
-                    )
-                )
-            ).alias("n"),
-            F.max("c").alias("m"),
-        )
-        .collect()[0]
+    ).agg(
+        F.max(F.size(F.regexp_extract_all("surface", F.lit(_TOK_RE_SQL), 0))).alias("nt")
     )
-    return min(int(r["n"] or 1), cap), int(r["m"] or 0)
+    # limit() over this unordered aggregate keeps an arbitrary subset of
+    # groups, but the subset is used only when it is ALL of them: with at
+    # most ANCHOR_EXACT_LIMIT groups, a limit one higher cannot drop any;
+    # with more, the head is discarded and both facts are recomputed over
+    # the full aggregate below. The limit only caps driver memory.
+    head = prof.limit(ANCHOR_EXACT_LIMIT + 1).collect()
+    if len(head) <= ANCHOR_EXACT_LIMIT:
+        anchors = frozenset(r["ft"] for r in head)
+        longest = max((r["nt"] or 0 for r in head), default=0)
+    else:
+        from bern_spark.functions.bloom import bloom_from_rdd
+
+        n, longest = prof.agg(F.count("*"), F.max("nt")).collect()[0]
+        anchors = bloom_from_rdd(prof.rdd.map(lambda r: r[0]), n_items=n, fp_rate=0.01)
+    return anchors, min(max(longest or 0, 1), MAX_NGRAM)
 
 
-def extract_mentions(
-    transcripts: DataFrame,
-    lexicon: DataFrame,
-    max_ngram: int | None = None,
-    apply_species_filter: bool = True,
-) -> DataFrame:
+def _lexicon_matches(turns: DataFrame, lexicon: DataFrame, carry=()) -> DataFrame:
+    """The row-local extraction prefix, shared by batch and streaming:
+    canonical text -> anchored candidate spans -> broadcast lexicon
+    lookup (inner: non-matches are not mentions). ``carry`` names extra
+    input columns passed through (the stream's ``ts``).
+
+    Returns (conv_id, turn_idx, *carry, start, end, mention, etype, score).
+    """
+    anchors, max_ngram = lexicon_profile(lexicon)
+    cands_udf = make_anchored_candidates_udf(anchors, max_ngram)
+    keys = ["conv_id", "turn_idx", *carry]
+    cands = with_canonical_text(turns).select(
+        *keys, F.explode(cands_udf(F.col("text"))).alias("_s")
+    ).select(*keys, "_s.start", "_s.end", "_s.surface")
+    return cands.join(
+        F.broadcast(lexicon.withColumnRenamed("weight", "score")), on="surface"
+    ).select(
+        *keys, "start", "end", F.col("surface").alias("mention"), "etype", "score"
+    )
+
+
+def _drop_stoplisted_species(m: DataFrame) -> DataFrame:
+    """P5 species stoplist (exact surface match, utils.py:279-308)."""
+    return m.where(
+        ~((F.col("etype") == "species") & F.col("mention").isin(SPECIES_STOPLIST))
+    )
+
+
+def extract_mentions(transcripts: DataFrame, lexicon: DataFrame) -> DataFrame:
     """Full extraction: canonical text -> candidates -> lexicon join ->
     longest-match pruning -> W9 overlap resolution -> P5 stoplist.
 
     Returns one row per surviving mention:
     (conv_id, turn_idx, start, end, mention, etype, score, mention_id).
     """
-    # multiplicity only matters for the W9-skip below; when the caller
-    # pins max_ngram we stay conservative (run W9) rather than pay a
-    # second lexicon job
-    unique_surfaces = False
-    first_toks = None
-    if max_ngram is None:
-        # ONE dim-sized job derives anchors + max_ngram + multiplicity
-        # together (was two: the anchor collect and the stats aggregate).
-        # The bounded collect caps driver memory exactly like
-        # anchor_set_for; oversized vocabularies fall back to the
-        # separate Bloom + aggregate path below.
-        head = (
-            lexicon.groupBy("surface")
-            .agg(F.count("*").alias("c"))
-            .select(
-                "c",
-                F.regexp_extract("surface", _TOK_RE_SQL, 0).alias("ft"),
-                F.size(
-                    F.regexp_extract_all("surface", F.lit(_TOK_RE_SQL), 0)
-                ).alias("nt"),
-            )
-            .limit(ANCHOR_EXACT_LIMIT + 1)
-            .collect()
-        )
-        if len(head) <= ANCHOR_EXACT_LIMIT:
-            first_toks = frozenset(r["ft"] for r in head)
-            max_ngram = min(max((int(r["nt"]) for r in head), default=1) or 1, MAX_NGRAM)
-            unique_surfaces = all(r["c"] == 1 for r in head)
-        else:
-            max_ngram, mult = lexicon_stats(lexicon)
-            unique_surfaces = mult <= 1
     # Parallelism floor: small-file sources get coalesced by
     # spark.sql.files.maxPartitionBytes into a handful of scan partitions,
     # which would serialize the Arrow tokenizer (measured: flat wall time
@@ -259,108 +227,46 @@ def extract_mentions(
     # cores-many byte splits, but a 1-row-group parquet file still feeds
     # every row through one split — the file count is the honest signal
     # there, while getNumPartitions covers filtered/derived inputs.
-    if not transcripts.isStreaming:
-        target = transcripts.sparkSession.sparkContext.defaultParallelism
-        files = transcripts.inputFiles()
-        few_files = 0 < len(files) < target
-        if few_files or transcripts.rdd.getNumPartitions() < target:
-            transcripts = transcripts.repartition(target)
-    turns = with_canonical_text(transcripts)
+    target = transcripts.sparkSession.sparkContext.defaultParallelism
+    few_files = 0 < len(transcripts.inputFiles()) < target
+    if few_files or transcripts.rdd.getNumPartitions() < target:
+        transcripts = transcripts.repartition(target)
 
-    # anchor set: first CoNLL token of every lexicon surface — exact set
-    # when vocab-sized (already collected by the combined stats job
-    # above when max_ngram was derived), executor-built Bloom filter
-    # beyond (bounded driver memory + bounded task-closure size at
-    # 10^8-surface scale)
-    if first_toks is None:
-        first_toks = anchor_set_for(lexicon)
-    cands_udf = make_anchored_candidates_udf(first_toks, max_ngram)
-    cands = turns.select(
-        "conv_id", "turn_idx", F.explode(cands_udf(F.col("text"))).alias("_s")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("_s.start").alias("start"),
-        F.col("_s.end").alias("end"),
-        F.col("_s.surface").alias("surface"),
+    # One exchange co-locates each turn's matches; the three windows
+    # below partition by supersets of (conv_id, turn_idx), which that
+    # hash partitioning already satisfies, so they add sorts, not shuffles.
+    m = _lexicon_matches(transcripts, lexicon).repartition("conv_id", "turn_idx")
+
+    # 4. longest-match containment within (turn, etype): drop a mention
+    # when a same-etype mention starts earlier and ends no earlier, or
+    # starts at the same offset and ends later.
+    by_type = Window.partitionBy("conv_id", "turn_idx", "etype")
+    earlier = by_type.orderBy("start").rangeBetween(Window.unboundedPreceding, -1)
+    same_start = Window.partitionBy("conv_id", "turn_idx", "etype", "start")
+    m = (
+        m.withColumn("_earlier_end", F.coalesce(F.max("end").over(earlier), F.lit(-1)))
+        .withColumn("_same_start_end", F.max("end").over(same_start))
+        .where((F.col("_earlier_end") < F.col("end")) & (F.col("_same_start_end") == F.col("end")))
+        .drop("_earlier_end", "_same_start_end")
     )
-
-    # 3. broadcast lexicon lookup (inner: non-matches are not mentions)
-    m = cands.join(
-        F.broadcast(lexicon.withColumnRenamed("weight", "score")),
-        on="surface",
-        how="inner",
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "start",
-        "end",
-        F.col("surface").alias("mention"),
-        "etype",
-        "score",
-    )
-
-    # 4. longest-match containment pruning within (turn, etype): drop a
-    # mention strictly contained in a longer same-type mention. Self
-    # anti-join keyed by the turn — blocks are tiny, AQE handles residue.
-    # VACUOUS for a unigram lexicon (guide §2.4 — remove shuffles
-    # outright): max_ngram == 1 makes every candidate a single token,
-    # tokens of a turn are disjoint spans, and "strictly contains" needs
-    # a strictly longer covering span — impossible, so both corpus-sized
-    # join shuffles are skipped.
-    if max_ngram > 1:
-        a, b = m.alias("a"), m.alias("b")
-        contained = a.join(
-            b,
-            on=[
-                F.col("a.conv_id") == F.col("b.conv_id"),
-                F.col("a.turn_idx") == F.col("b.turn_idx"),
-                F.col("a.etype") == F.col("b.etype"),
-                F.col("b.start") <= F.col("a.start"),
-                F.col("b.end") >= F.col("a.end"),
-                (F.col("b.end") - F.col("b.start")) > (F.col("a.end") - F.col("a.start")),
-            ],
-            how="left_semi",
-        )
-        m = a.join(
-            contained.select(
-                F.col("a.conv_id").alias("conv_id"),
-                F.col("a.turn_idx").alias("turn_idx"),
-                F.col("a.start").alias("start"),
-                F.col("a.end").alias("end"),
-                F.col("a.etype").alias("etype"),
-            ),
-            on=["conv_id", "turn_idx", "start", "end", "etype"],
-            how="left_anti",
-        )
 
     # 5. W9: identical spans claimed by >1 etype -> keep max score; a tie
-    # keeps both (the reference's == fall-through, ops.py:292-298).
-    # VACUOUS when no surface occurs in more than one lexicon row: an
-    # identical (turn, start, end) span has identical surface text, so
-    # multiple claims on one span can only come from multiple lexicon
-    # rows for that surface — the window (a full corpus Exchange+Sort)
-    # is skipped when lexicon_stats proved multiplicity 1.
-    if not unique_surfaces:
-        from pyspark.sql import Window
+    # keeps both (the reference's == fall-through, ops.py:292-298). A
+    # null score never equals the max, so null-weight claims drop.
+    same_span = Window.partitionBy("conv_id", "turn_idx", "start", "end")
+    m = (
+        m.withColumn("_max_score", F.max("score").over(same_span))
+        .where(F.col("score") == F.col("_max_score"))
+        .drop("_max_score")
+    )
 
-        w = Window.partitionBy("conv_id", "turn_idx", "start", "end")
-        m = (
-            m.withColumn("_max_score", F.max("score").over(w))
-            .where(F.col("score") == F.col("_max_score"))
-            .drop("_max_score")
-        )
-
-    # 6. P5 species stoplist (exact surface match, utils.py:279-308)
-    if apply_species_filter:
-        m = m.where(
-            ~((F.col("etype") == "species") & F.col("mention").isin(SPECIES_STOPLIST))
-        )
+    # 6. after W9: a stoplisted species claim still outscores other types
+    # on its span before it is dropped
+    m = _drop_stoplisted_species(m)
 
     # Durable mention identity (replaces the reference's order-based zip
     # identity, J10/normalize.py:571-576 — SURVEY §7 hard part c).
-    m = m.withColumn(
+    return m.withColumn(
         "mention_id",
         F.concat_ws("|", "conv_id", F.col("turn_idx").cast("string"), F.col("start").cast("string")),
     )
-    return m

@@ -6,9 +6,10 @@ split honestly:
 
 - ``streaming_candidate_mentions``: the truly stateless prefix — canonical
   text, Arrow tokenization, candidate n-grams, broadcast lexicon join, the
-  P5 stoplist filter. All row-local + stream-static join => valid in a
-  continuous streaming query. (W9 overlap resolution needs a window
-  function and containment pruning a self-join — both unsupported on
+  P5 stoplist filter — the SAME prefix ``extract_mentions`` runs (one
+  shared helper in extract.py). All row-local + stream-static join =>
+  valid in a continuous streaming query. (Containment pruning and W9
+  overlap resolution are non-time windows per turn — unsupported on
   unbounded streams, so they stay out of this prefix.)
 - ``foreach_batch_resolver``: the FULL pipeline (overlap resolution,
   normalization, blocking, scoring, per-batch clustering) inside
@@ -25,13 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bern_spark.datagen import SPECIES_STOPLIST
-from bern_spark.operators.extract import (
-    anchor_set_for,
-    lexicon_max_ngram,
-    make_anchored_candidates_udf,
-    with_canonical_text,
-)
+from bern_spark.operators.extract import _drop_stoplisted_species, _lexicon_matches
 
 _DURATION_UNITS_MS = {
     "millisecond": 1, "milliseconds": 1, "ms": 1,
@@ -51,59 +46,24 @@ def _duration_ms(s: str) -> int:
 
 
 def streaming_candidate_mentions(
-    transcripts_stream: DataFrame,
-    lexicon: DataFrame,
-    watermark: str = "1 hour",
-    max_ngram: int | None = None,
-    apply_species_filter: bool = True,
+    transcripts_stream: DataFrame, lexicon: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:
     """Stateless streaming mention matching; carries ``ts`` through for
     event-time windowing downstream.
 
-    Uses the SAME anchor-gated candidate generator as the batch path
-    (extract.py): the anchored Arrow UDF is row-local, hence stream-legal,
-    and avoids the O(tokens x max_ngram) unanchored explode the batch
-    path measured as its memory-bandwidth ceiling. The lexicon is a
-    static (bounded) DataFrame, so deriving ``max_ngram`` and the anchor
-    set from it before the stream starts is legal — and necessary:
-    a fixed default of 4 would silently drop >=5-token surfaces
-    (mutations like 'c.1847G>T' are 5 CoNLL tokens).
+    Runs the batch path's own prefix (extract.py): the anchored Arrow
+    UDF is row-local, hence stream-legal, and the lexicon is a static
+    (bounded) DataFrame, so profiling it for the anchor set and
+    ``max_ngram`` before the stream starts is legal — and necessary: a
+    fixed n-gram default would silently drop long surfaces (mutations
+    like 'c.1847G>T' are 5 CoNLL tokens). The UDF runs on text only;
+    ts/ids pass through the select, so no stream-stream self-join is
+    needed to recover event time.
     """
-    if max_ngram is None:
-        max_ngram = lexicon_max_ngram(lexicon)
-    cands_udf = make_anchored_candidates_udf(anchor_set_for(lexicon), max_ngram)
-    s = with_canonical_text(transcripts_stream.withWatermark("ts", watermark))
-    # the UDF runs on text only; ts/ids pass through the select, so no
-    # stream-stream self-join is needed to recover event time
-    cands = s.select(
-        "conv_id", "turn_idx", "ts", F.explode(cands_udf(F.col("text"))).alias("_s")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.col("_s.start").alias("start"),
-        F.col("_s.end").alias("end"),
-        F.col("_s.surface").alias("surface"),
+    m = _lexicon_matches(
+        transcripts_stream.withWatermark("ts", watermark), lexicon, carry=("ts",)
     )
-    m = cands.join(
-        F.broadcast(lexicon.withColumnRenamed("weight", "score")),
-        cands["surface"] == lexicon["surface"],
-        "inner",
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        "start",
-        "end",
-        cands["surface"].alias("mention"),
-        "etype",
-        "score",
-    )
-    if apply_species_filter:
-        m = m.where(
-            ~((F.col("etype") == "species") & F.col("mention").isin(SPECIES_STOPLIST))
-        )
-    return m
+    return _drop_stoplisted_species(m)
 
 
 def foreach_batch_resolver(lexicon: DataFrame, dicts: dict[str, DataFrame], sink_fn):

@@ -1,9 +1,8 @@
-"""Round-2 coverage: Bloom anchor set, anchored streaming parity,
+"""Round-2 coverage: Bloom filter, anchored streaming parity,
 embedding-cosine scoring, WordPiece (W5), force-chunking (W1),
 cross-shard salting bridges."""
 
 import datetime
-import pickle
 import re
 
 from pyspark.sql import functions as F
@@ -25,48 +24,6 @@ def test_bloom_filter_no_false_negatives():
     # fp rate sanity: well under 10x the target on fresh probes
     fps = sum(1 for i in range(10_000) if f"absent{i}" in bf)
     assert fps < 500
-
-
-def test_anchor_set_bloom_path_bounded_and_correct(spark):
-    from bern_spark.functions.bloom import BloomFilter
-    from bern_spark.operators.extract import anchor_set_for, extract_mentions
-
-    # 10^6 distinct single-token surfaces + one real drug surface
-    big_lex = spark.range(1_000_000).select(
-        F.lit("drug").alias("etype"),
-        F.concat(F.lit("syn"), F.col("id")).alias("surface"),
-        F.lit(0.8).alias("weight"),
-    ).unionByName(
-        spark.createDataFrame([("drug", "aspirin", 0.9)], ["etype", "surface", "weight"])
-    )
-    anchors = anchor_set_for(big_lex)
-    assert isinstance(anchors, BloomFilter)
-    # bounded task closure: ~1.2 MB at 1% fp for 10^6 items, never the
-    # ~10^8-byte frozenset
-    assert len(pickle.dumps(anchors)) < 5_000_000
-    assert "aspirin" in anchors and "syn12345" in anchors
-
-    transcripts = spark.createDataFrame(
-        [("c1", 0, "user", "take aspirin and syn42 now", None, None)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    got = {
-        r.mention
-        for r in extract_mentions(transcripts, big_lex).collect()
-    }
-    assert got == {"aspirin", "syn42"}
-
-
-def test_anchor_set_exact_path_small_lexicon(spark):
-    from bern_spark.operators.extract import anchor_set_for
-
-    lex = spark.createDataFrame(
-        [("drug", "aspirin", 0.8), ("mutation", "c.1847G>T", 0.9)],
-        ["etype", "surface", "weight"],
-    )
-    anchors = anchor_set_for(lex)
-    assert isinstance(anchors, frozenset)
-    assert anchors == frozenset({"aspirin", "c"})
 
 
 # ---------------------------------------------------------------------------

@@ -3,8 +3,6 @@
 Every test here pins an equivalence or plan property that a round-7
 optimization introduced:
 
-- extract_mentions skips its containment anti-join / W9 window only when
-  provably vacuous — outputs must be IDENTICAL to the conservative path;
 - normalize_all's single-pass tagged-dictionary form must reproduce the
   per-etype normalizer branches exactly (cascade order, species fallback,
   taxid/root transforms, CUI-less on miss, unknown etypes);
@@ -22,64 +20,6 @@ from pyspark.sql import functions as F
 def _rows(df, cols=None):
     cols = cols or df.columns
     return sorted(tuple(r) for r in df.select(*sorted(cols)).collect())
-
-
-# ---------------------------------------------------------------------------
-# extract_mentions vacuous-stage skips
-# ---------------------------------------------------------------------------
-
-
-def test_extract_skip_paths_match_conservative_path(spark):
-    """Unigram unique-surface lexicon: the auto path (skips containment +
-    W9) must emit exactly the rows of the pinned-max_ngram path (which
-    stays conservative and runs W9)."""
-    from bern_spark.operators.extract import extract_mentions
-
-    turns = spark.createDataFrame(
-        [
-            ("c1", 0, "user", "aspirin and warfarin dose", None),
-            ("c2", 0, "user", "aspirin aspirin twice", None),
-            ("c3", 0, "user", "no matches here", None),
-        ],
-        "conv_id string, turn_idx int, role string, text string, tool string",
-    )
-    lex = spark.createDataFrame(
-        [("drug", "aspirin", 0.9), ("drug", "warfarin", 0.8)],
-        ["etype", "surface", "weight"],
-    )
-    fast = extract_mentions(turns, lex)  # max_ngram=None -> stats + skips
-    slow = extract_mentions(turns, lex, max_ngram=1)  # conservative W9 path
-    assert _rows(fast) == _rows(slow)
-    assert fast.count() == 4
-
-
-def test_extract_multi_token_lexicon_keeps_full_path(spark):
-    """Multi-token + duplicated-surface lexicon exercises the NON-skip
-    branches: containment pruning and W9 max-score-with-tie semantics
-    must behave exactly as before the round-7 skips existed."""
-    from bern_spark.operators.extract import extract_mentions
-
-    turns = spark.createDataFrame(
-        [("c1", 0, "user", "acute myeloid leukemia therapy", None)],
-        "conv_id string, turn_idx int, role string, text string, tool string",
-    )
-    lex = spark.createDataFrame(
-        [
-            ("disease", "acute myeloid leukemia", 0.9),
-            ("disease", "myeloid leukemia", 0.8),  # strictly contained: pruned
-            ("gene", "therapy", 0.7),
-            ("drug", "therapy", 0.7),  # W9 tie at the same span: keep both
-            ("species", "therapy", 0.2),  # W9 loser: dropped
-        ],
-        ["etype", "surface", "weight"],
-    )
-    out = extract_mentions(turns, lex).select("mention", "etype").collect()
-    got = sorted((r["mention"], r["etype"]) for r in out)
-    assert got == [
-        ("acute myeloid leukemia", "disease"),
-        ("therapy", "drug"),
-        ("therapy", "gene"),
-    ]
 
 
 # ---------------------------------------------------------------------------
