@@ -20,13 +20,14 @@ Key families (SURVEY §7 step 4):
   whose token keys differ.
 
 Hot-block defense for *distinct-surface* blocks that are still large:
-block sizes are profiled relationally and oversized blocks are salted
-into shards; AQE skew-join splitting backs this up at runtime.
+after one exchange on the block key, block sizes are a window count,
+oversized blocks are salted into shards and bridged by a window min, all
+inside the partition — skew costs no extra shuffle round.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bern_spark.functions.keys import tmchem_key
@@ -78,11 +79,6 @@ def token_block_key(col) -> F.Column:
     return tmchem_key(first_tok)
 
 
-def surface_nodes(mentions: DataFrame) -> DataFrame:
-    """Distinct (etype, surface) relation from a mentions DataFrame."""
-    return mentions.select("etype", F.col("mention").alias("surface")).dropDuplicates()
-
-
 def with_block_keys(surfaces: DataFrame) -> DataFrame:
     """Add ``block_key`` (first-token key), ``block_key_full``
     (whole-surface tmChem key), and ``bands`` (LSH band buckets) to a
@@ -112,6 +108,22 @@ def with_block_keys(surfaces: DataFrame) -> DataFrame:
     return m.withColumn("bands", bands).drop("_sig")
 
 
+def _keyed(surfaces: DataFrame, use_lsh: bool) -> DataFrame:
+    """(surface, etype, bkey, bsize): one row per surface per block key,
+    hash-partitioned on ``bkey`` (blocking's one exchange), with the block
+    size as a window count over that partitioning. Rows are unique per
+    (etype, bkey): the input is a distinct-surface relation and each
+    surface's keys are array_distinct'd."""
+    key_arr = F.array(F.col("block_key"), F.col("block_key_full"))
+    if use_lsh:
+        key_arr = F.concat(key_arr, F.col("bands"))
+    return (
+        surfaces.select("surface", "etype", F.explode(F.array_distinct(key_arr)).alias("bkey"))
+        .repartition("bkey")
+        .withColumn("bsize", F.count(F.lit(1)).over(Window.partitionBy("bkey")))
+    )
+
+
 def candidate_pairs(
     surfaces: DataFrame,
     max_block_size: int = 200,
@@ -121,97 +133,73 @@ def candidate_pairs(
     deduped across key families. Returns (block_key, mention_a, mention_b,
     etype) — column names match the scoring stage's contract.
 
+    Two exchanges: after the one on ``bkey`` every block is
+    partition-local, and the cross-family dedup is the second. Each
+    (bkey, etype, shard) group collects its sorted surfaces, and a
+    generator emits every pair in sorted order — no self-join.
+
     Salting: blocks larger than ``max_block_size`` split into shards by a
     deterministic surface hash, bounding per-block pair work at cap^2 per
-    shard. Cross-shard recall is a DISCLOSED tradeoff, partially
-    recoverable via representative bridge pairs: each shard's
-    lexicographic-min surface additionally pairs with the block's overall
-    min (one bridge pair per shard), so a true match (x, y) split across
-    shards can be recovered by transitive clustering — but only when every
-    hop in x–shardRep–blockRep–shardRep'–y independently scores above
-    threshold, which unrelated representative surfaces generally won't.
-    The mechanism adds connectivity, not guaranteed recall; no false
-    merges are introduced (bridges still have to *score*).
-    ``salting_stats`` reports which blocks sharded so the recall exposure
-    is measurable.
+    shard (and each group's array at about cap surfaces). Cross-shard
+    recall is a DISCLOSED tradeoff, partially recoverable via
+    representative bridge pairs: each shard's lexicographic-min surface
+    additionally pairs with the block's overall min (a window min over the
+    same partitioning), so a true match (x, y) split across shards can be
+    recovered by transitive clustering — but only when every hop in
+    x–shardRep–blockRep–shardRep'–y independently scores above threshold,
+    which unrelated representative surfaces generally won't. The mechanism
+    adds connectivity, not guaranteed recall; no false merges are
+    introduced (bridges still have to *score*). ``salting_stats`` reports
+    which blocks sharded so the recall exposure is measurable.
     """
-    # (surface, etype, bkey) built ROW-LOCAL (round-7): the key families
-    # of one surface collapse into one array_distinct'd array + explode —
-    # the input is a distinct-surface relation, so rows are unique by
-    # construction and the old 3-way union + corpus-of-vocab-sized
-    # dropDuplicates shuffle disappears (guide §2.4).
-    key_arr = F.array(F.col("block_key"), F.col("block_key_full"))
-    if use_lsh:
-        key_arr = F.concat(key_arr, F.col("bands"))
-    keyed = surfaces.select(
-        "surface", "etype", F.explode(F.array_distinct(key_arr)).alias("bkey")
+    hot = F.col("bsize") > max_block_size
+    shard = F.pmod(F.hash("surface"), F.ceil(F.col("bsize") / max_block_size))
+    groups = (
+        _keyed(surfaces, use_lsh)
+        .groupBy("bkey", "etype", F.when(hot, shard).otherwise(0).alias("shard"), "bsize")
+        .agg(F.sort_array(F.collect_list("surface")).alias("ss"))
     )
-
-    sizes = keyed.groupBy("bkey").agg(F.count("*").alias("bsize"))
-    keyed = keyed.join(
-        F.broadcast(sizes.where(F.col("bsize") > max_block_size)), "bkey", "left"
+    ss = F.col("ss")
+    # (element, index) lambda on purpose: each surface pairs with the ones
+    # after it (surfaces are unique per group, so mention_a < mention_b)
+    pairs = F.flatten(
+        F.transform(
+            ss,
+            lambda x, i: F.transform(
+                F.slice(ss, i + 2, F.size(ss)),
+                lambda y: F.struct(x.alias("mention_a"), y.alias("mention_b")),
+            ),
+        )
     )
-    n_shards = F.ceil(F.col("bsize") / max_block_size)
-    keyed = keyed.withColumn(
-        "shard",
-        F.when(F.col("bsize").isNull(), F.lit(0)).otherwise(
-            F.pmod(F.hash("surface"), n_shards)
-        ),
+    within = groups.select(
+        F.concat_ws("#", "bkey", F.col("shard").cast("string")).alias("block_key"),
+        F.inline(pairs),
+        "etype",
     )
-    # bridge pairs for sharded blocks: shard-min <-> block-min (every key
-    # family prefixes etype into bkey, so a block is single-etype)
-    sharded = keyed.where(F.col("bsize").isNotNull())
-    shard_reps = sharded.groupBy("bkey", "etype", "shard").agg(
-        F.min("surface").alias("rep")
-    )
-    block_reps = shard_reps.groupBy("bkey", "etype").agg(F.min("rep").alias("brep"))
+    # bridge pairs for sharded blocks: block-min <-> shard-min
     bridges = (
-        shard_reps.join(block_reps, ["bkey", "etype"])
-        .where(F.col("rep") != F.col("brep"))
+        groups.where(hot)
         .select(
             F.concat_ws("#", "bkey", F.lit("rep")).alias("block_key"),
-            F.least("rep", "brep").alias("mention_a"),
-            F.greatest("rep", "brep").alias("mention_b"),
+            F.min(ss[0]).over(Window.partitionBy("bkey", "etype")).alias("mention_a"),
+            ss[0].alias("mention_b"),
             "etype",
         )
-    )
-
-    skeyed = keyed.withColumn(
-        "bkey", F.concat_ws("#", "bkey", F.col("shard").cast("string"))
-    ).drop("bsize", "shard")
-    a = skeyed.alias("a")
-    b = skeyed.alias("b")
-    within = (
-        a.join(b, on="bkey")
-        .where(F.col("a.etype") == F.col("b.etype"))
-        .where(F.col("a.surface") < F.col("b.surface"))
-        .select(
-            F.col("bkey").alias("block_key"),
-            F.col("a.surface").alias("mention_a"),
-            F.col("b.surface").alias("mention_b"),
-            F.col("a.etype").alias("etype"),
-        )
+        .where(F.col("mention_a") != F.col("mention_b"))
     )
     return within.unionByName(bridges).dropDuplicates(["mention_a", "mention_b", "etype"])
 
 
 def salting_stats(surfaces: DataFrame, max_block_size: int = 200, use_lsh: bool = True) -> DataFrame:
     """Observability for the hot-block defense: one row per block that
-    got sharded — (bkey, bsize, n_shards). Pair volume capped at
-    bsize*cap per block instead of bsize^2; the bridge pairs above keep
-    cross-shard matches reachable, but a spike here means the block keys
-    are too coarse and deserves a look."""
-    # same row-local key construction as candidate_pairs (kept identical
-    # so the reported stats always describe the real pairing blocks)
-    key_arr = F.array(F.col("block_key"), F.col("block_key_full"))
-    if use_lsh:
-        key_arr = F.concat(key_arr, F.col("bands"))
-    keyed = surfaces.select(
-        "surface", "etype", F.explode(F.array_distinct(key_arr)).alias("bkey")
-    )
+    got sharded — (bkey, bsize, n_shards), projected from the keyed
+    relation ``candidate_pairs`` pairs. Pair volume capped at bsize*cap
+    per block instead of bsize^2; the bridge pairs above keep cross-shard
+    matches reachable, but a spike here means the block keys are too
+    coarse and deserves a look."""
     return (
-        keyed.groupBy("bkey")
-        .agg(F.count("*").alias("bsize"))
+        _keyed(surfaces, use_lsh)
         .where(F.col("bsize") > max_block_size)
-        .withColumn("n_shards", F.ceil(F.col("bsize") / max_block_size))
+        .dropDuplicates(["bkey"])
+        .select("bkey", "bsize", F.ceil(F.col("bsize") / max_block_size).alias("n_shards"))
     )

@@ -8,10 +8,10 @@ Jaccard over the two surfaces — batched in an **iterator-form pandas UDF**
 -> free with iterator UDFs, SURVEY §2.10 U1).
 
 Scale design: scores are computed once per **distinct surface pair**, not
-per mention pair — the distinct-pair relation is orders of magnitude
-smaller under Zipfian surface distributions (the "cancer" block has one
-distinct pair). The mention-pair relation then broadcast-joins the scored
-distinct pairs back.
+per mention pair (orders of magnitude fewer under Zipfian surface
+distributions; the "cancer" block has one distinct pair). Blocking already
+emits distinct pairs, and vectorized UDFs run on every row of their input
+anyway, so the scorer works in place: no dedup or join-back of its own.
 """
 
 from __future__ import annotations
@@ -117,18 +117,19 @@ def score_pairs(
 ) -> DataFrame:
     """Score candidate pairs; return edges above threshold.
 
-    Distinct-surface-pair optimization: canonicalize (lo, hi) surface order
-    so (a,b) and (b,a) share one scored row, score distinct pairs, join
-    back. Identical tmChem keys short-circuit to 1.0 without touching
-    Python (the J1 key equivalence is a match by construction).
+    Scores each row in place (``pairs`` holds distinct surface pairs, as
+    ``candidate_pairs`` emits them), canonicalizing (lo, hi) surface order
+    so (a,b) and (b,a) score identically. Identical tmChem keys
+    short-circuit to 1.0 without touching Python (the J1 key equivalence
+    is a match by construction).
 
     ``embeddings`` (optional): a (surface, emb) relation — e.g.
     ``hashed_surface_embeddings`` or a model's vectors. When given, the
     embedding-cosine of the pair blends into the string score with weight
     ``COSINE_WEIGHT`` (the north-star's JW/Levenshtein/embedding-cosine
-    scorer set). Joined per DISTINCT pair side, so the embedding UDF cost
-    stays vocabulary-bounded; pairs whose surface lacks a vector fall
-    back to the pure string blend.
+    scorer set). Joined per pair side, so the embedding UDF runs once per
+    surface, not per pair; pairs whose surface lacks a vector fall back
+    to the pure string blend.
     """
     # P8: the " gene" suffix is non-distinguishing for gene mentions
     # (normalize.py:540-548 strips it before lookup); strip it before
@@ -136,26 +137,24 @@ def score_pairs(
     strip = lambda c: F.when(  # noqa: E731
         F.col("etype") == "gene", F.regexp_replace(c, "(?i) gene$", "")
     ).otherwise(c)
-    with_surf = (
+    scored = (
         pairs.withColumn("_sa", strip(F.col("mention_a")))
         .withColumn("_sb", strip(F.col("mention_b")))
         .withColumn("_lo", F.least("_sa", "_sb"))
         .withColumn("_hi", F.greatest("_sa", "_sb"))
         .drop("_sa", "_sb")
-    )
-
-    distinct = with_surf.select("_lo", "_hi").dropDuplicates()
-    distinct = distinct.withColumn(
-        "_score",
-        F.when(tmchem_key(F.col("_lo")) == tmchem_key(F.col("_hi")), F.lit(1.0)).otherwise(
-            pair_score_udf(F.col("_lo"), F.col("_hi"))
-        ),
+        .withColumn(
+            "score",
+            F.when(tmchem_key(F.col("_lo")) == tmchem_key(F.col("_hi")), F.lit(1.0)).otherwise(
+                pair_score_udf(F.col("_lo"), F.col("_hi"))
+            ),
+        )
     )
     if embeddings is not None:
         e_lo = embeddings.select(F.col("surface").alias("_lo"), F.col("emb").alias("_e_lo"))
         e_hi = embeddings.select(F.col("surface").alias("_hi"), F.col("emb").alias("_e_hi"))
-        distinct = (
-            distinct.join(e_lo, "_lo", "left")
+        scored = (
+            scored.join(e_lo, "_lo", "left")
             .join(e_hi, "_hi", "left")
             .withColumn(
                 "_cos",
@@ -165,19 +164,18 @@ def score_pairs(
                 ),
             )
             .withColumn(
-                "_score",
-                F.when(F.col("_score") >= 1.0, F.col("_score")).otherwise(
+                "score",
+                F.when(F.col("score") >= 1.0, F.col("score")).otherwise(
                     F.when(
                         F.col("_cos").isNotNull(),
-                        (1.0 - COSINE_WEIGHT) * F.col("_score")
+                        (1.0 - COSINE_WEIGHT) * F.col("score")
                         + COSINE_WEIGHT * F.greatest(F.col("_cos"), F.lit(0.0)),
-                    ).otherwise(F.col("_score"))
+                    ).otherwise(F.col("score"))
                 ),
             )
             .drop("_e_lo", "_e_hi", "_cos")
         )
-    scored = with_surf.join(distinct, on=["_lo", "_hi"], how="left").drop("_lo", "_hi")
-    scored = scored.withColumnRenamed("_score", "score")
+    scored = scored.drop("_lo", "_hi")
     # per-etype thresholds: mutations default to exact-equivalence only —
     # the reference's J3 join is deliberately fuzz-free
     # (mutation_normalizer.py:48-49)

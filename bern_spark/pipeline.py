@@ -32,8 +32,10 @@ from bern_spark.operators.scoring import score_pairs
 # Bump when stage semantics change: part of the lineage fingerprint, so a
 # resumed store never replays stage parquet written by incompatible code
 # (the reference's hash-named temp files, server.py:384-396, made explicit).
-PIPELINE_VERSION = "7"  # bumped when stage OUTPUTS change, not just tokens
-# (v6: the blocking-stage MinHash seed capture fix — operators/blocking.py
+PIPELINE_VERSION = "8"  # bumped when stage OUTPUTS change, not just tokens
+# (v8: candidate_pairs' cross-family dedup sees its rows in another order,
+# so the block_key kept per pair in pairs_scored can differ from v7's.
+# v6: the blocking-stage MinHash seed capture fix — operators/blocking.py
 # _perm_min — changed LSH candidate sets; a v5 store must not resume with
 # pre-fix stage parquet. v5: plan tokens render via non-verbose treeString.)
 

@@ -1,6 +1,5 @@
 """Round-2 coverage: Bloom filter, anchored streaming parity,
-embedding-cosine scoring, WordPiece (W5), force-chunking (W1),
-cross-shard salting bridges."""
+embedding-cosine scoring, WordPiece (W5), force-chunking (W1)."""
 
 import datetime
 import re
@@ -253,63 +252,3 @@ def test_force_chunk_mixed_sentences():
     # default path still tiles exactly
     tiled = sentence_spans(text)
     assert "".join(text[s:e] for s, e in tiled) == text
-
-
-# ---------------------------------------------------------------------------
-# blocking: cross-shard bridges + salting stats
-# ---------------------------------------------------------------------------
-
-
-def test_salted_block_bridges_and_stats(spark):
-    from bern_spark.operators.blocking import (
-        candidate_pairs,
-        salting_stats,
-        with_block_keys,
-    )
-
-    # 300 surfaces sharing the first-token block key 'hot'
-    surfaces = spark.range(300).select(
-        F.lit("drug").alias("etype"),
-        F.concat(F.lit("hot variant"), F.col("id")).alias("surface"),
-    )
-    blocked = with_block_keys(surfaces).persist()
-    pairs = candidate_pairs(blocked, max_block_size=50, use_lsh=False).persist()
-
-    stats = salting_stats(blocked, max_block_size=50, use_lsh=False).collect()
-    assert any(r.bsize == 300 and r.n_shards >= 2 for r in stats)
-
-    bridges = pairs.where(F.col("block_key").endswith("#rep"))
-    assert bridges.count() > 0
-    # every bridge touches the block representative (global min surface)
-    brep = surfaces.agg(F.min("surface")).collect()[0][0]
-    assert bridges.where(F.col("mention_a") != brep).count() == 0
-
-    # transitive reachability: bridge edges + within-shard edges connect
-    # the whole hot block into one component
-    from bern_spark.operators.cc import connected_components
-
-    edges = pairs.select(
-        F.col("mention_a").alias("src"), F.col("mention_b").alias("dst")
-    )
-    k = (
-        connected_components(edges)
-        .agg(F.countDistinct("cluster_id"))
-        .collect()[0][0]
-    )
-    assert k == 1
-    pairs.unpersist()
-    blocked.unpersist()
-
-
-def test_block_keys_plan_is_jvm_only(spark):
-    # relational minhash: no Python eval node anywhere in the blocking plan
-    from bern_spark.operators.blocking import with_block_keys
-
-    surfaces = spark.createDataFrame(
-        [("drug", "aspirin"), ("drug", "asprin")], ["etype", "surface"]
-    )
-    plan = with_block_keys(surfaces)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # near-identical surfaces still share at least one band bucket
-    rows = with_block_keys(surfaces).collect()
-    assert len(rows[0].bands) == 4
