@@ -1306,15 +1306,7 @@ def er_pipeline_on_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bern_spark.pipeline import ERConfig, resolve_entities
 
-    d = _read(spark, sf_dir, "documents")
-    transcripts = d.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.col("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.timestamp_seconds(F.lit(1700000000)).alias("ts"),
-    )
+    transcripts = _docs_as_turns(_read(spark, sf_dir, "documents"))
     lexicon = spark.createDataFrame(
         [("drug", n, 0.8) for _, n in ER_DICT], ["etype", "surface", "weight"]
     )

@@ -129,52 +129,35 @@ class LineageStore:
         build_fn,
         fingerprint: str | None = None,
         verify: bool = False,
-        extra_metrics: dict | None = None,
     ) -> DataFrame:
-        """Materialize ``build_fn()`` once; subsequent calls (including
-        after a restart) read the parquet back without recompute — unless
-        ``fingerprint`` no longer matches the manifest's, in which case
-        the stage is recomputed (config/input/code drift invalidation).
+        """Materialize ``build_fn()`` as the parquet stage ``stage`` and
+        return a fresh scan of it — a lineage cut that survives the
+        driver. A later call (including after a restart) whose
+        ``fingerprint`` matches the completed manifest's reads the parquet
+        back without calling ``build_fn``; a different fingerprint
+        (config/input/code drift) recomputes and overwrites the stage.
 
-        Row count is observed during the single write pass; ``verify=True``
-        additionally runs the per-file checksum audit scan.
-
-        ``extra_metrics`` (name -> aggregate Column) ride the SAME
-        write-pass observation and land in the manifest as strings under
-        ``"metrics"`` — callers that need an aggregate of the stage
-        output (e.g. the CC convergence signature) read it from the
-        manifest instead of paying a second full scan of the parquet
-        they just wrote. Absent from manifests written before this field
-        existed — callers must fall back to scanning when missing."""
+        The manifest records the row count, observed during the single
+        write pass, plus wall time and the fingerprint; ``verify=True``
+        additionally runs the per-file checksum audit scan."""
         man = self.read_manifest(stage)
         path = self._dpath(stage)
         if man and man.get("status") == "complete":
             if fingerprint is None or man.get("fingerprint") == fingerprint:
                 return spark.read.parquet(path)
             # fingerprint drift: fall through and recompute
-        if extra_metrics and "rows" in extra_metrics:
-            raise ValueError(
-                "extra_metrics name 'rows' is reserved (the built-in row "
-                "count) — a duplicate alias would corrupt the manifest"
-            )
         t0 = time.time()
         df = build_fn()
         obs = Observation(f"lineage_{stage}_{next(_obs_counter)}")
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        for name, col in (extra_metrics or {}).items():
-            aggs.append(col.alias(name))
-        df.observe(obs, *aggs).write.mode("overwrite").parquet(path)
-        got = obs.get
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
         payload = {
             "status": "complete",
             "stage": stage,
-            "rows": got["rows"],
+            "rows": obs.get["rows"],
             "fingerprint": fingerprint,
             "wall_sec": round(time.time() - t0, 3),
             "ts": time.time(),
         }
-        if extra_metrics:
-            payload["metrics"] = {k: str(got[k]) for k in extra_metrics}
         if verify:
             payload["partitions"] = self._partition_metrics(spark, path)
         self._write_manifest(stage, payload)

@@ -131,7 +131,9 @@ def candidate_pairs(
 ) -> DataFrame:
     """Within-block distinct-surface pairs, ``surface_a < surface_b``,
     deduped across key families. Returns (block_key, mention_a, mention_b,
-    etype) — column names match the scoring stage's contract.
+    etype) — column names match the scoring stage's contract; a pair found
+    under several keys carries the smallest (``<bkey>#<shard>`` or
+    ``<bkey>#rep``).
 
     Two exchanges: after the one on ``bkey`` every block is
     partition-local, and the cross-family dedup is the second. Each
@@ -187,7 +189,14 @@ def candidate_pairs(
         )
         .where(F.col("mention_a") != F.col("mention_b"))
     )
-    return within.unionByName(bridges).dropDuplicates(["mention_a", "mention_b", "etype"])
+    # cross-family dedup; the pair keeps its smallest contributing key so
+    # ``block_key`` does not depend on which row reaches the exchange first
+    return (
+        within.unionByName(bridges)
+        .groupBy("mention_a", "mention_b", "etype")
+        .agg(F.min("block_key").alias("block_key"))
+        .select("block_key", "mention_a", "mention_b", "etype")
+    )
 
 
 def salting_stats(surfaces: DataFrame, max_block_size: int = 200, use_lsh: bool = True) -> DataFrame:

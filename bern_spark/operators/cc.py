@@ -22,12 +22,13 @@ deterministic). Two paths, chosen by a size gate measured at run time:
   - small-star: connect every neighbor <= u (and u) to the minimum.
 
   Each round is a groupBy-shuffle on node id; convergence when the edge
-  set stops changing. Per-iteration ``localCheckpoint`` truncates lineage
-  so plans don't grow across iterations (SURVEY §7 hard part e).
+  set stops changing. Each iteration's edge set goes through the caller's
+  cut, so plans don't grow across iterations (SURVEY §7 hard part e).
 
-Both paths read the same checkpointed canonical edge set, so a graph over
-the bound is deduplicated once, not once for the gate and again for the
-rounds.
+Both paths read the same cut canonical edge set, so a graph over the
+bound is deduplicated once, not once for the gate and again for the
+rounds. The cut is the caller's stage-cut policy (``resolve_entities``
+passes the one it chose at entry); this module never decides durability.
 """
 
 from __future__ import annotations
@@ -50,6 +51,19 @@ from pyspark.sql import types as T
 LOCAL_MAX_EDGES = 200_000
 
 
+def lazy_cut(df: DataFrame) -> DataFrame:
+    """The in-memory stage cut, shared by ``connected_components`` and
+    ``resolve_entities``: a LAZY ``localCheckpoint``. It truncates the
+    logical plan at once (analysis stays O(stage)), but its blocks are
+    computed by the first downstream action instead of a separate eager
+    job per cut. Lives only as long as the Spark application.
+
+    No ``persist()`` before it: that would ALSO register the
+    pre-checkpoint plan in the CacheManager, an entry the rebind orphans,
+    leaking one full cache per cut for the session lifetime."""
+    return df.localCheckpoint(eager=False)
+
+
 def _canonical_undirected(edges: DataFrame, keep_loops: bool = False) -> DataFrame:
     """Distinct (src <= dst) edges; with ``keep_loops`` the self-loops stay
     as (n, n) rows, so the endpoints are exactly the node set. A null
@@ -59,16 +73,6 @@ def _canonical_undirected(edges: DataFrame, keep_loops: bool = False) -> DataFra
     )
     e = e.where(F.col("src").isNotNull()) if keep_loops else e.where(F.col("src") != F.col("dst"))
     return e.dropDuplicates()
-
-
-def _sig_h_col() -> F.Column:
-    """Order-insensitive edge-set hash aggregate — THE convergence
-    signature expression, used both by the in-memory signature scan and
-    as the durable stage's write-pass metric. One definition: if the two
-    ever diverged, equal edge sets would never compare equal across
-    paths and every durable run would silently burn max_iter
-    iterations."""
-    return F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)"))
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -134,9 +138,7 @@ def _local_labels(edges) -> pa.Table:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    lineage_store=None,
-    fingerprint: str | None = None,
-    stage_prefix: str = "cc",
+    cut=lazy_cut,
 ) -> DataFrame:
     """Return (node, cluster_id) with cluster_id = min node id in component.
 
@@ -144,80 +146,33 @@ def connected_components(
     duplicates tolerated; a node with only self-loops labels itself.
 
     **Size gate.** The canonical edge set (src <= dst, deduplicated,
-    self-loops kept) is checkpointed, then one ``limit(LOCAL_MAX_EDGES + 1)``
-    fetch both measures and transfers it. If it fits, the components are
-    solved on the driver by union-find and returned as a
-    ``F.broadcast``-hinted local relation: downstream the labels join the
-    corpus-sized mentions, and a relation measured to be small should not
-    pay for partitioned execution. The bound is set by driver memory (see
-    ``LOCAL_MAX_EDGES``), not by speed: on a 4-core box, ``local[4]``, a
-    199k-edge graph (800 components of 250 nodes) took 10.1 s and 7 jobs
-    on the local path against 55.0 s and 129 jobs on the star path, both
-    timed through a count of the labels.
+    self-loops kept) goes through ``cut``, then one
+    ``limit(LOCAL_MAX_EDGES + 1)`` fetch both measures and transfers it.
+    If it fits, the components are solved on the driver by union-find and
+    returned as a ``F.broadcast``-hinted local relation: downstream the
+    labels join the corpus-sized mentions, and a relation measured to be
+    small should not pay for partitioned execution. The bound is set by
+    driver memory (see ``LOCAL_MAX_EDGES``), not by speed: on a 4-core
+    box, ``local[4]``, a 199k-edge graph (800 components of 250 nodes)
+    took 10.1 s and 7 jobs on the local path against 55.0 s and 129 jobs
+    on the star path, both timed through a count of the labels.
 
     Over the bound, the star rounds run (``max_iter`` caps them; a
     non-converged run warns and may return partially merged labels). No
     hint is attached there: at that size AQE stays free to choose the join
-    (the pipeline.py contract).
+    (the pipeline.py contract). Each iteration's edge set goes through
+    ``cut`` too, and convergence is one aggregate over it.
 
-    ``lineage_store`` (a ``bern_spark.lineage.LineageStore``) makes the
-    checkpoints DURABLE: the canonical edge set lands as the parquet stage
-    ``{stage_prefix}_init`` and, on the star path, each iteration's edge
-    set as ``{stage_prefix}_iter_NNN``, keyed by ``fingerprint``, so a
-    driver killed mid-fixpoint (CC on 10^8 surface nodes runs minutes of
-    iterations) resumes by fast-forwarding through completed iterations —
-    per completed iteration the replay cost is one manifest read, never a
-    star-round recompute. ``fingerprint`` is REQUIRED with a store and
-    must identify the edge set and CC config (resolve_entities passes its
-    pipeline fingerprint). Without a store, checkpoints are in-memory
-    localCheckpoints (single-process lifetime).
+    ``cut`` (DataFrame -> DataFrame) truncates lineage; it is called once
+    for the canonical edge set and once per star-round iteration. The
+    default is the in-memory :func:`lazy_cut`. ``resolve_entities`` passes
+    its own cut, so with a lineage store these edge sets become the run's
+    next positional stages under the run's fingerprint: a driver killed
+    mid-fixpoint replays the iterations it finished from parquet instead
+    of recomputing them.
     """
-    if lineage_store is not None and fingerprint is None:
-        raise ValueError(
-            "lineage_store requires a fingerprint identifying the edge set "
-            "and CC config — resuming another run's iteration stages would "
-            "silently mix edge sets"
-        )
     spark = edges.sparkSession
-
-    if lineage_store is not None:
-        def _ckpt(df: DataFrame, tag: str) -> DataFrame:
-            # run_stage: computes+writes once, reads back on resume with
-            # a matching fingerprint — the read-back is a fresh parquet
-            # scan, so it is lineage-truncated exactly like a checkpoint.
-            # The convergence signature rides the write-pass observation
-            # into the manifest, so a durable iteration costs ONE pass
-            # over the edges (write), not write + signature re-scan.
-            return lineage_store.run_stage(
-                spark,
-                f"{stage_prefix}_{tag}",
-                lambda: df,
-                fingerprint=fingerprint,
-                extra_metrics={"sig_h": _sig_h_col()},
-            )
-
-        def _stage_sig(tag: str):
-            man = lineage_store.read_manifest(f"{stage_prefix}_{tag}") or {}
-            m = man.get("metrics") or {}
-            if man.get("status") == "complete" and "sig_h" in m:
-                return (str(man["rows"]), m["sig_h"])
-            return None  # pre-metrics manifest: caller scans instead
-    else:
-        def _ckpt(df: DataFrame, tag: str) -> DataFrame:
-            # lazy: every in-memory checkpoint here is immediately
-            # followed by an action (the bounded fetch or the _sig
-            # aggregate) that materializes its blocks in the SAME job; an
-            # eager checkpoint would run a separate job for nothing
-            return df.localCheckpoint(eager=False)
-
-        def _stage_sig(tag: str):
-            return None
-
-    # localCheckpoint only (no Dataset-level persist first): a persist()
-    # before it would ALSO register the pre-checkpoint plan in the
-    # CacheManager — an entry the rebind orphans, leaking one full
-    # edge-set cache per checkpoint for the session lifetime
-    e = _ckpt(_canonical_undirected(edges, keep_loops=True), "init")
+    e = cut(_canonical_undirected(edges, keep_loops=True))
     # collect(), not toArrow(): a limited collect scans partitions
     # incrementally and stops at LOCAL_MAX_EDGES + 1 rows, where toArrow()
     # would shuffle up to that many rows out of EVERY partition of a large set
@@ -241,34 +196,29 @@ def connected_components(
         # one aggregate job: (row count, order-insensitive xxhash sum) —
         # canonical edge sets are equal iff signatures are equal (hash
         # collision odds ~2^-64 per iteration; acceptable for a
-        # convergence check that only ever stops a loop *early*).
-        # Stringified so it compares consistently with manifest-sourced
-        # signatures (the durable path stores metrics as strings).
+        # convergence check that only ever stops a loop *early*)
         r = df.agg(
-            F.count("*").alias("n"), _sig_h_col().alias("h")
+            F.count("*").alias("n"),
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
         ).collect()[0]
-        return (str(r["n"]), str(r["h"]))
+        return (r["n"], r["h"])
 
     # the init set keeps self-loops and every round drops them, so a graph
     # with self-loops that is already a star converges one round later
-    sig = _stage_sig("init") or _sig(e)
+    sig = _sig(e)
     converged = False
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # the relational star round reads its input twice (min-aggregate
         # branch + join branch), so cache the large-star intermediate or
         # the small round would recompute it along both branches
         mid = _star_round(e, large=True).persist()
-        # no persist first (see the initial checkpoint above): the
-        # checkpoint reads `mid` (persisted) once and stores its own
-        # blocks; a pre-checkpoint cache entry would leak
-        e2 = _ckpt(_star_round(mid, large=False), f"iter_{i:03d}")
-        # durable iterations read the signature from the manifest
-        # (computed in the stage's write pass) — no second scan; in-memory
-        # iterations run the aggregate, which also materializes e2
-        sig2 = _stage_sig(f"iter_{i:03d}") or _sig(e2)
+        # the cut reads `mid` (persisted) once; the aggregate materializes
+        # a lazy cut's blocks and reads a durable one back
+        e2 = cut(_star_round(mid, large=False))
+        sig2 = _sig(e2)
         mid.unpersist()
-        # e2's blocks are now self-contained checkpoint data: the earlier
-        # edge set is unreachable from its (truncated) lineage
+        # e2 is now self-contained cut data: the earlier edge set is
+        # unreachable from its (truncated) lineage
         e.unpersist()
         e = e2
         if sig2 == sig:

@@ -135,17 +135,26 @@ def normalize_gene(
     ).drop("_oid")
 
 
-def attach_metadata(normalized: DataFrame, meta: DataFrame, etype: str) -> DataFrame:
-    """J7/J8: left-join external ids; miss keeps the bare id
-    (normalize.py:594-603). Multi-IDs stay an array (not tab-packed).
-    Gene ext ids get the HGNC:HGNC: cleanup (normalize.py:114)."""
-    fixed = meta.select(
-        "oid",
-        F.transform(F.col("ext_ids"), hgnc_fix).alias("ext_ids")
-        if etype == "gene"
-        else F.col("ext_ids"),
-    )
-    return normalized.join(F.broadcast(fixed), "oid", "left").withColumn(
+def attach_metadata(mentions: DataFrame, dicts: dict[str, DataFrame]) -> DataFrame:
+    """J7/J8: ``norm_ids`` from the external ids of ``dicts``'
+    meta_{gene,disease,drug} (normalize.py:594-603). A miss keeps the bare
+    ``BERN:<oid>``; CUI-less stays ``[CUI-less]``; multi-IDs stay an array
+    (not tab-packed); gene ext ids get the HGNC:HGNC: cleanup
+    (normalize.py:114).
+
+    One pass: the three meta dims union into one etype-tagged broadcast
+    ``(etype, oid) -> ext_ids`` joined on (etype, oid), so a mention of
+    any other etype simply misses."""
+    meta = None
+    for etype in ("gene", "disease", "drug"):
+        ext = F.col("ext_ids")
+        part = dicts[f"meta_{etype}"].select(
+            F.lit(etype).alias("etype"),
+            "oid",
+            F.transform(ext, hgnc_fix).alias("ext_ids") if etype == "gene" else ext,
+        )
+        meta = part if meta is None else meta.unionByName(part)
+    return mentions.join(F.broadcast(meta), ["etype", "oid"], "left").withColumn(
         "norm_ids",
         F.when(F.col("oid") == CUI_LESS, F.array(F.lit(CUI_LESS))).otherwise(
             F.concat(

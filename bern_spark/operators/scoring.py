@@ -31,6 +31,9 @@ from bern_spark.functions.pytext import jaro_winkler, levenshtein_sim, token_jac
 EMB_DIM = 64
 # weight of the embedding cosine in the blended pair score
 COSINE_WEIGHT = 0.3
+# mutations match on exact equivalence only: the reference's J3 join is
+# deliberately fuzz-free (mutation_normalizer.py:48-49)
+MUTATION_THRESHOLD = 0.999
 
 
 def _hashed_embedding(s: str, dim: int = EMB_DIM) -> list[float]:
@@ -112,10 +115,10 @@ def pair_score_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Ser
 def score_pairs(
     pairs: DataFrame,
     threshold: float = 0.85,
-    etype_thresholds: dict[str, float] | None = None,
     embeddings: DataFrame | None = None,
 ) -> DataFrame:
-    """Score candidate pairs; return edges above threshold.
+    """Score candidate pairs; return edges at or above ``threshold``
+    (``MUTATION_THRESHOLD`` for mutations).
 
     Scores each row in place (``pairs`` holds distinct surface pairs, as
     ``candidate_pairs`` emits them), canonicalizing (lo, hi) surface order
@@ -176,11 +179,7 @@ def score_pairs(
             .drop("_e_lo", "_e_hi", "_cos")
         )
     scored = scored.drop("_lo", "_hi")
-    # per-etype thresholds: mutations default to exact-equivalence only —
-    # the reference's J3 join is deliberately fuzz-free
-    # (mutation_normalizer.py:48-49)
-    th = {"mutation": 0.999, **(etype_thresholds or {})}
-    thr_col = F.lit(threshold)
-    for et, t in th.items():
-        thr_col = F.when(F.col("etype") == et, F.lit(t)).otherwise(thr_col)
+    thr_col = F.when(F.col("etype") == "mutation", F.lit(MUTATION_THRESHOLD)).otherwise(
+        F.lit(threshold)
+    )
     return scored.where(F.col("score") >= thr_col)

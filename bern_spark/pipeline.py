@@ -24,16 +24,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bern_spark.operators.blocking import candidate_pairs, with_block_keys
-from bern_spark.operators.cc import connected_components
+from bern_spark.operators.cc import connected_components, lazy_cut
 from bern_spark.operators.extract import extract_mentions
-from bern_spark.operators.normalize import CUI_LESS, normalize_all
+from bern_spark.operators.normalize import CUI_LESS, attach_metadata, normalize_all
 from bern_spark.operators.scoring import score_pairs
 
 # Bump when stage semantics change: part of the lineage fingerprint, so a
 # resumed store never replays stage parquet written by incompatible code
 # (the reference's hash-named temp files, server.py:384-396, made explicit).
-PIPELINE_VERSION = "8"  # bumped when stage OUTPUTS change, not just tokens
-# (v8: candidate_pairs' cross-family dedup sees its rows in another order,
+PIPELINE_VERSION = "9"  # bumped when stage OUTPUTS change, not just tokens
+# (v9: pairs_scored keeps each pair's min block_key, and CC's edge sets
+# are positional stage_NN stages instead of cc_init / cc_iter_NNN.
+# v8: candidate_pairs' cross-family dedup sees its rows in another order,
 # so the block_key kept per pair in pairs_scored can differ from v7's.
 # v6: the blocking-stage MinHash seed capture fix — operators/blocking.py
 # _perm_min — changed LSH candidate sets; a v5 store must not resume with
@@ -55,25 +57,14 @@ def _plan_token(df: DataFrame) -> str:
     past the cutoff would collide — a false fingerprint MATCH, i.e. a
     stale-stage read. The explicit-arg form also avoids mutating session
     conf around the call (a second thread rendering concurrently would
-    race the set/unset back to the truncated form)."""
+    race a set/unset back to the truncated form)."""
     import hashlib
 
-    plan = df._jdf.queryExecution().analyzed().canonicalized()
-    try:
-        # treeString(verbose, addSuffix, maxFields, printOperatorId,
-        # printOutputColumns) — Spark 4.x TreeNode signature
-        s = plan.treeString(False, False, 100_000, False, False)
-    except Exception:
-        # arity drift in a future Spark: fall back to raising the conf
-        # around a plain toString (single-threaded callers only)
-        conf = df.sparkSession.conf
-        key = "spark.sql.debug.maxToStringFields"
-        prev = conf.get(key, None)
-        conf.set(key, "100000")
-        try:
-            s = plan.toString()
-        finally:
-            conf.unset(key) if prev is None else conf.set(key, prev)
+    # treeString(verbose, addSuffix, maxFields, printOperatorId,
+    # printOutputColumns) — the Spark 4.x TreeNode signature
+    s = df._jdf.queryExecution().analyzed().canonicalized().treeString(
+        False, False, 100_000, False, False
+    )
     return hashlib.sha256(s.encode()).hexdigest()[:16]
 
 
@@ -333,18 +324,15 @@ def resolve_entities(
     ``lineage_store`` (a ``bern_spark.lineage.LineageStore``) swaps the
     in-memory stage cuts for durable parquet stage tables with manifests:
     a restarted job resumes from the last completed stage (north-rule
-    resumability). Without it, stages cut lineage via lazy
-    localCheckpoint. The cut policy is chosen once, here at entry.
+    resumability). Without it, stages cut lineage via ``cc.lazy_cut``.
+    The cut policy is chosen once, here at entry, and every stage cut of
+    the run — connected components' included — goes through it.
     """
     cfg = config or ERConfig()
-    fp = None
     if lineage_store is None:
-        # LAZY checkpoints (round-7): the cut still truncates the logical
-        # plan immediately (analysis stays O(stage)), but materialization
-        # rides the first downstream action instead of paying a separate
-        # eager job per stage — nothing here unpersists a cut, so the
-        # lazy blocks are always reachable until computed.
-        cut = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
+        # lazy: materialization rides the first downstream action, and
+        # nothing here unpersists a cut, so its blocks stay reachable
+        cut = lazy_cut
     else:
         spark = transcripts.sparkSession
         stage_names = (f"stage_{i:02d}" for i in itertools.count(1))
@@ -476,19 +464,15 @@ def resolve_entities(
     # broadcast-able join afterwards. (Mention-level edges would make CC
     # corpus-sized for zero information gain: a mention connects only
     # through its surface.)
-    # Below cc.LOCAL_MAX_EDGES canonical edges the components are solved
-    # on the driver and come back as a broadcast relation. Above it, with
-    # a lineage store the star-round iterations checkpoint to durable
-    # stages (cc_iter_NNN, keyed by the run fingerprint): a driver killed
-    # mid-fixpoint fast-forwards through completed iterations on restart
-    # instead of redoing them (north-rule resumability for the one loop
-    # that runs minutes at 10^8 nodes)
-    surf_labels = connected_components(
-        edges,
-        max_iter=cfg.max_cc_iter,
-        lineage_store=lineage_store,
-        fingerprint=fp,
-    ).select(
+    # CC cuts its canonical edge set and each star-round iteration with
+    # the run's own cut. Below cc.LOCAL_MAX_EDGES canonical edges only the
+    # canonical set is cut and the components come back as a broadcast
+    # relation. With a lineage store every cut is the next positional
+    # stage under the run fingerprint, so a driver killed mid-fixpoint
+    # replays the iterations it finished on restart instead of redoing
+    # them (north-rule resumability for the one loop that runs minutes at
+    # 10^8 nodes)
+    surf_labels = connected_components(edges, max_iter=cfg.max_cc_iter, cut=cut).select(
         F.col("node").alias("_snode"), F.col("cluster_id").alias("_scluster")
     )
 
@@ -503,38 +487,8 @@ def resolve_entities(
     ).drop("_snode", "_scluster")
     labels = clustered.select("node", "cluster_id")
 
-    # metadata attach (J7/J8) in ONE pass (round-7): the old per-etype
-    # fan-out scanned the clustered relation 4 times and unioned back;
-    # the three meta dims instead union into one etype-tagged broadcast
-    # ((etype, oid) -> ext_ids, gene ids HGNC-fixed meta-side exactly as
-    # attach_metadata does) and the no-meta branch is the same norm_ids
-    # expression with ext_ids null — attach_metadata stays the
-    # single-etype public operator; semantics per row unchanged.
-    from bern_spark.functions.keys import hgnc_fix
-
-    meta_parts = []
-    for etype, meta_key in (("gene", "meta_gene"), ("disease", "meta_disease"), ("drug", "meta_drug")):
-        meta_parts.append(
-            dicts[meta_key].select(
-                F.lit(etype).alias("etype"),
-                "oid",
-                F.transform(F.col("ext_ids"), hgnc_fix).alias("ext_ids")
-                if etype == "gene"
-                else F.col("ext_ids"),
-            )
-        )
-    meta_all = meta_parts[0]
-    for p in meta_parts[1:]:
-        meta_all = meta_all.unionByName(p)
-    final = clustered.join(F.broadcast(meta_all), ["etype", "oid"], "left").withColumn(
-        "norm_ids",
-        F.when(F.col("oid") == CUI_LESS, F.array(F.lit(CUI_LESS))).otherwise(
-            F.concat(
-                F.coalesce(F.col("ext_ids"), F.array().cast("array<string>")),
-                F.array(F.concat(F.lit("BERN:"), F.col("oid"))),
-            )
-        ),
-    ).drop("ext_ids")
+    # metadata attach (J7/J8): one broadcast join for all three meta dims
+    final = attach_metadata(clustered, dicts)
 
     # W11 output ordering lives where it is observable: the per-turn
     # ``denotations`` arrays below are sort_array'd by (start, etype), and

@@ -1,6 +1,7 @@
 """Blocking (distinct-surface pairing, token keys, LSH bands, salting)
 and pairwise scoring."""
 
+import random
 import re
 from collections import defaultdict
 
@@ -150,27 +151,41 @@ def _blocks(blocked, use_lsh):
 
 
 def _reference_pairs(blocks, cap):
-    """(etype, mention_a, mention_b) set of the blocking contract in plain
-    Python: blocks above ``cap`` split into ``ceil(bsize / cap)`` shards
-    by hash, all pairs a < b within a shard, and one bridge per shard from
-    the block's min surface to the shard's min."""
-    out = set()
-    for ms in blocks.values():
+    """(etype, mention_a, mention_b) -> the keys that yield the pair, by
+    the blocking contract in plain Python: blocks above ``cap`` split into
+    ``ceil(bsize / cap)`` shards by hash, all pairs a < b within a shard
+    (key ``<bkey>#<shard>``), and one bridge per shard from the block's
+    min surface to the shard's min (key ``<bkey>#rep``)."""
+    out = defaultdict(set)
+    for bkey, ms in blocks.items():
         n_shards = -(-len(ms) // cap) if len(ms) > cap else 1
         shards = defaultdict(list)  # (etype, shard) -> surfaces
         for et, s, h in ms:
             shards[(et, h % n_shards)].append(s)
-        for (et, _), ss in shards.items():
-            out |= {(et, a, b) for a in ss for b in ss if a < b}
+        for (et, shard), ss in shards.items():
+            for a in ss:
+                for b in ss:
+                    if a < b:
+                        out[(et, a, b)].add(f"{bkey}#{shard}")
         if len(ms) > cap:
             for et in {et for et, _ in shards}:
                 reps = [min(ss) for (e, _), ss in shards.items() if e == et]
-                out |= {(et, min(reps), r) for r in reps if r != min(reps)}
+                for r in reps:
+                    if r != min(reps):
+                        out[(et, min(reps), r)].add(f"{bkey}#rep")
     return out
 
 
 def _pairs(df):
     return {(r.etype, r.mention_a, r.mention_b) for r in df.collect()}
+
+
+def _pair_keys(df):
+    """(etype, mention_a, mention_b) -> block_key; each pair occurs once."""
+    rows = df.collect()
+    out = {(r.etype, r.mention_a, r.mention_b): r.block_key for r in rows}
+    assert len(out) == len(rows)
+    return out
 
 
 _HEADS = ["hot", "Hot", "cold", "a", "é", "字", "😀", "β-1", "x"]
@@ -191,6 +206,20 @@ def _vocabularies(draw):
 
 
 _HOT = [("drug", f"hot {c}") for c in "abcdefg"]
+_SYLLABLES = ("ra", "zo", "mi", "ta", "lek", "vor", "din", "ax", "bru", "cel", "fi", "gor", "han")
+
+
+def _syllable_vocab(seed, n):
+    """``n`` drug surfaces: seeded syllable stems with case, hyphen and
+    deletion variants, so many pairs share several keys of every family."""
+    rng = random.Random(seed)
+    out = set()
+    while len(out) < n:
+        stem = "".join(rng.choice(_SYLLABLES) for _ in range(3 + rng.randrange(2)))
+        i = rng.randrange(1, len(stem) - 1)
+        for s in (stem, stem.capitalize(), stem[:3] + "-" + stem[3:], stem[:i] + stem[i + 1 :]):
+            out.add(("drug", s))
+    return sorted(out)[:n]
 
 
 @settings(
@@ -204,12 +233,16 @@ _HOT = [("drug", f"hot {c}") for c in "abcdefg"]
 @example((_HOT + [("gene", s) for _, s in _HOT], 3, True))  # same keys under two etypes
 @example(([("drug", s) for s in ["a", "é", "字", "😀", "x", "Aspirin", "aspirin!"]], 2, True))
 @example(([("drug", "a")], 2, False))  # a lone surface has no pair
+@example((_syllable_vocab(2, 290), 5, True))  # ~120 pairs found under several keys
 def test_candidate_pairs_match_reference(spark, case):
     rows, cap, use_lsh = case
     blocked = with_block_keys(_surfaces(spark, rows))
     blocks = _blocks(blocked, use_lsh)
-    got = _pairs(candidate_pairs(blocked, max_block_size=cap, use_lsh=use_lsh))
-    assert got == _reference_pairs(blocks, cap)
+    got = _pair_keys(candidate_pairs(blocked, max_block_size=cap, use_lsh=use_lsh))
+    ref = _reference_pairs(blocks, cap)
+    assert set(got) == set(ref)
+    # a pair found under several keys keeps the smallest of them
+    assert got == {p: min(keys) for p, keys in ref.items()}
     # at a cap no block exceeds, the salted path is the unsalted one
     top = max(len(ms) for ms in blocks.values())
     assert _pairs(candidate_pairs(blocked, max_block_size=top, use_lsh=use_lsh)) == _pairs(

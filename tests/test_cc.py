@@ -1,8 +1,10 @@
 """Connected components: both paths of the size gate (driver union-find and
 star rounds) against each other and a pure-Python reference; star-round
-skew safety and shuffle budget; max_iter exhaustion; durable iteration
-stages and resume; job counts."""
+skew safety and shuffle budget; max_iter exhaustion; the caller's cut,
+durable iteration stages and resume; job counts."""
 
+import itertools
+import os
 from contextlib import contextmanager, nullcontext
 from unittest import mock
 
@@ -207,13 +209,56 @@ def test_cc_warns_on_max_iter_exhaustion(spark):
 
 
 # ---------------------------------------------------------------------------
-# Durable CC iteration checkpoints (north-rule mid-fixpoint resumability)
+# The caller's cut: once for the canonical set, once per star iteration;
+# over a lineage store, durable iteration stages and resume
 # ---------------------------------------------------------------------------
 
 
+def test_star_path_cuts_canonical_set_and_each_iteration(spark):
+    """A recording cut sees the canonical edge set (self-loops kept) and
+    then one edge set per star-round iteration, up to the first that
+    equals its predecessor; the labels are the reference's."""
+    edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(12)][::-1]
+    edges += [("y", "x"), ("x", "y"), ("z", "z")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    seen = []
+
+    def recording_cut(d):
+        seen.append({tuple(r) for r in d.collect()})
+        return cc.lazy_cut(d)
+
+    with star_path():
+        got = _labels(connected_components(df, cut=recording_cut))
+    assert got == _reference(edges)
+    assert seen[0] == {(min(e), max(e)) for e in edges}
+    iters = seen[1:]
+    assert len(iters) >= 2 and iters[-1] == iters[-2]
+    assert all(a != b for a, b in zip(seen, iters[:-1]))
+
+    seen.clear()
+    with star_path(), pytest.warns(RuntimeWarning, match="max_iter"):
+        connected_components(df, max_iter=1, cut=recording_cut)
+    assert len(seen) == 2
+
+
+def _store_cut(spark, store, fingerprint):
+    """The cut ``resolve_entities`` uses over a lineage store: each call
+    is the store's next positional stage under one fingerprint."""
+    names = (f"stage_{i:02d}" for i in itertools.count(1))
+    return lambda df: store.run_stage(spark, next(names), lambda: df, fingerprint=fingerprint)
+
+
+def _stage_ts(store):
+    """stage -> manifest ``ts`` of every stage in the store."""
+    stages = [
+        f.removesuffix(".manifest.json") for f in os.listdir(store.base) if f.endswith(".manifest.json")
+    ]
+    return {s: store.read_manifest(s)["ts"] for s in stages}
+
+
 def test_cc_durable_iterations_and_fast_forward(spark, tmp_path):
-    """With a LineageStore, every star-round iteration checkpoint lands as
-    a durable stage keyed by fingerprint: labels match the in-memory path
+    """With a store-backed cut, every star-round iteration lands as a
+    durable stage keyed by fingerprint: labels match the in-memory path
     bit-for-bit, a rerun with the same fingerprint fast-forwards (no
     stage rewrite — manifest timestamps unchanged), and a fingerprint
     drift recomputes."""
@@ -224,56 +269,51 @@ def test_cc_durable_iterations_and_fast_forward(spark, tmp_path):
     ref = {(r["node"], r["cluster_id"]) for r in connected_components(edges).collect()}
 
     store = LineageStore(str(tmp_path / "cc"))
-    with pytest.raises(ValueError):
-        connected_components(edges, lineage_store=store)  # fingerprint required
     with star_path():
         a = {
             (r["node"], r["cluster_id"])
-            for r in connected_components(
-                edges, lineage_store=store, fingerprint="f1"
-            ).collect()
+            for r in connected_components(edges, cut=_store_cut(spark, store, "f1")).collect()
         }
         assert a == ref
-        init_man = store.read_manifest("cc_init")
-        it0_man = store.read_manifest("cc_iter_000")
+        init_man = store.read_manifest("stage_01")
+        it0_man = store.read_manifest("stage_02")
         assert init_man["status"] == "complete" and it0_man["status"] == "complete"
+        ts = _stage_ts(store)
 
         # same fingerprint -> fast-forward: stages are read, never rewritten
         b = {
             (r["node"], r["cluster_id"])
-            for r in connected_components(
-                edges, lineage_store=store, fingerprint="f1"
-            ).collect()
+            for r in connected_components(edges, cut=_store_cut(spark, store, "f1")).collect()
         }
         assert b == ref
-        assert store.read_manifest("cc_iter_000")["ts"] == it0_man["ts"]
+        assert _stage_ts(store) == ts
 
         # fingerprint drift (different edge set claim) -> recompute
-        c = connected_components(edges, lineage_store=store, fingerprint="f2")
+        c = connected_components(edges, cut=_store_cut(spark, store, "f2"))
         assert {(r["node"], r["cluster_id"]) for r in c.collect()} == ref
-        assert store.read_manifest("cc_iter_000")["ts"] != it0_man["ts"]
+        assert store.read_manifest("stage_02")["ts"] != it0_man["ts"]
 
 
 def test_cc_local_path_with_store_writes_no_iterations(spark, tmp_path):
-    """Under the bound, a store holds the canonical edge set (so a graph
-    over the bound would not be deduplicated twice) and no star-round
-    iteration stage."""
+    """Under the bound, a store-backed cut holds the canonical edge set
+    (so a graph over the bound would not be deduplicated twice) and no
+    star-round iteration stage."""
     from bern_spark.entry_queries import CC_EDGES
     from bern_spark.lineage import LineageStore
 
     edges = spark.createDataFrame(CC_EDGES, ["src", "dst"])
     store = LineageStore(str(tmp_path / "cc"))
-    got = _labels(connected_components(edges, lineage_store=store, fingerprint="f"))
+    got = _labels(connected_components(edges, cut=_store_cut(spark, store, "f")))
     assert got == _reference(CC_EDGES)
-    assert store.read_manifest("cc_init")["status"] == "complete"
-    assert store.read_manifest("cc_iter_000") is None
+    assert store.read_manifest("stage_01")["status"] == "complete"
+    assert store.read_manifest("stage_02") is None
 
 
 def test_resolve_entities_cc_stages_in_lineage(spark, tmp_path):
-    """The pipeline threads its fingerprint into CC when a lineage store
-    is present: on the star path cc_iter stages appear beside the
-    positional stages, and the resumed pipeline still produces identical
-    labels."""
+    """The pipeline hands CC its own cut when a lineage store is present:
+    on the star path CC's canonical edge set and iterations follow the
+    pipeline's four stages as stage_05, stage_06, ..., and the resumed
+    pipeline rewrites no stage and produces identical labels."""
     from bern_spark.datagen import generate, to_spark
     from bern_spark.lineage import LineageStore
     from bern_spark.pipeline import resolve_entities
@@ -287,8 +327,9 @@ def test_resolve_entities_cc_stages_in_lineage(spark, tmp_path):
             lineage_store=store,
         )
         labels1 = {(r["node"], r["cluster_id"]) for r in res["labels"].collect()}
-        assert store.read_manifest("cc_init")["status"] == "complete"
-        assert store.read_manifest("cc_iter_000")["status"] == "complete"
+        assert store.read_manifest("stage_05")["status"] == "complete"
+        assert store.read_manifest("stage_06")["status"] == "complete"
+        ts = _stage_ts(store)
         # resume into a fresh process-equivalent: same store, same inputs
         res2 = resolve_entities(
             dfs["transcripts"], dfs["lexicon"], dd, id_merge=dfs["id_merge"],
@@ -296,6 +337,7 @@ def test_resolve_entities_cc_stages_in_lineage(spark, tmp_path):
         )
         labels2 = {(r["node"], r["cluster_id"]) for r in res2["labels"].collect()}
     assert labels1 == labels2
+    assert _stage_ts(store) == ts
 
 
 def test_cc_star_round_has_no_wide_row_aggregate(spark):

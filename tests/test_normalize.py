@@ -1,6 +1,9 @@
-"""Normalization joins J1-J9 on hand-built fixtures."""
+"""Normalization joins J1-J9 on hand-built fixtures, the metadata attach,
+and the fused `normalize_all` against the per-branch normalizers."""
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bern_spark.operators import normalize as N
@@ -79,11 +82,13 @@ def test_metadata_attach_gene_hgnc_fix(spark):
         [("672", ["HGNC:HGNC:1100", "MIM:113705"]), ("X", [])],
         ["oid", "ext_ids"],
     )
+    empty = spark.createDataFrame([], meta.schema)
+    dicts = {"meta_gene": meta, "meta_disease": empty, "meta_drug": empty}
     norm = spark.createDataFrame(
         [("BRCA1", "gene", "1", "672"), ("misс", "gene", "2", "CUI-less")],
         ["mention", "etype", "mention_id", "oid"],
     )
-    out = {r.mention: r.norm_ids for r in N.attach_metadata(norm, meta, "gene").collect()}
+    out = {r.mention: r.norm_ids for r in N.attach_metadata(norm, dicts).collect()}
     assert out["BRCA1"] == ["HGNC:1100", "MIM:113705", "BERN:672"]
     assert out["misс"] == ["CUI-less"]
 
@@ -125,3 +130,91 @@ def test_normalize_all_null_oid_never_shadows_a_hit(spark):
         )
     )
     assert branch == {"TP53": "7157", "BRCA1": "672"}
+
+
+# ---------------------------------------------------------------------------
+# property: the fused normalize_all == the per-branch normalizers
+# ---------------------------------------------------------------------------
+
+_NAMES = [
+    "aspirin", "Aspirin", "ASPIRIN!", "beta-blocker", "Beta Blocker", "BRCA1",
+    "BRCA1 gene", "brca1", "p.V600E", "P.V600E", "p.V600E;c.1799", "Homo sapiens",
+    "homo sapiens", "HOMO SAPIENS", "é", "É", "字", "中文 gene", "😀", "x-y z",
+]
+_ETYPES = ["drug", "disease", "mutation", "species", "gene", "pathway"]
+# species oids are numeric (the J9 taxid transform casts them); gene oids
+# carry '-' suffixes for the root truncation; the rest are free-form
+_OIDS = {
+    "species": ["960601", "1000001", "12", "99"],
+    "gene": ["672", "672-2", "7157", "7157-1", "10"],
+    "other": ["C1", "C2", "D9", "字1", "😀"],
+}
+_DICTS = {
+    "dict_drug": "other", "dict_disease": "other", "dict_mutation": "other",
+    "dict_species": "species", "dict_gene": "gene", "dict_gene_oldbest": "gene",
+    "dict_gene_freq": "gene",
+}
+
+
+@st.composite
+def _dicts_and_mentions(draw):
+    """Dictionaries over one shared name pool (so names recur across
+    dictionaries and, with the small oid pools, as duplicate keys with
+    different oids), null oids included; mentions of every etype plus one
+    without a dictionary."""
+    name = st.sampled_from(_NAMES)
+    dicts = {
+        k: draw(st.lists(st.tuples(st.sampled_from(_OIDS[pool] + [None]), name), max_size=8))
+        for k, pool in _DICTS.items()
+    }
+    mentions = draw(st.lists(st.tuples(name, st.sampled_from(_ETYPES)), min_size=1, max_size=14))
+    return dicts, mentions
+
+
+def _per_branch(m, d):
+    """The per-branch normalizers, each on its etype's mentions; etypes
+    without a dictionary stay CUI-less."""
+    by = lambda et: m.where(F.col("etype") == et)  # noqa: E731
+    parts = [
+        N.normalize_drug(by("drug"), d["dict_drug"]),
+        N.normalize_disease(by("disease"), d["dict_disease"]),
+        N.normalize_mutation(by("mutation"), d["dict_mutation"]),
+        N.normalize_species(by("species"), d["dict_species"]),
+        N.normalize_gene(by("gene"), d["dict_gene"], d["dict_gene_oldbest"], d["dict_gene_freq"]),
+        m.where(~F.col("etype").isin(*_ETYPES[:-1])).withColumn("oid", F.lit(N.CUI_LESS)),
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(_dicts_and_mentions())
+@example(
+    (
+        {
+            "dict_drug": [(None, "aspirin"), ("C2", "ASPIRIN!"), ("C1", "Aspirin")],
+            "dict_disease": [("D9", "Beta Blocker"), ("C1", "beta-blocker")],
+            "dict_mutation": [("C1", "p.V600E"), ("C2", "p.V600E")],
+            "dict_species": [("960601", "Homo sapiens"), ("12", "homo sapiens"), (None, "é")],
+            "dict_gene": [(None, "BRCA1"), ("7157-1", "字")],
+            "dict_gene_oldbest": [("672-2", "BRCA1"), ("10", "BRCA1")],
+            "dict_gene_freq": [("7157", "字"), ("672", "中文")],
+        },
+        [(n, et) for n in _NAMES for et in _ETYPES],
+    )
+)
+def test_normalize_all_matches_per_branch_normalizers(spark, case):
+    rows, mentions = case
+    d = {k: spark.createDataFrame(v, "oid string, name string") for k, v in rows.items()}
+    m = _mentions(spark, mentions)
+    got = {r.mention_id: r.oid for r in N.normalize_all(m, d).collect()}
+    ref = {r.mention_id: r.oid for r in _per_branch(m, d).collect()}
+    assert got == ref
+    assert len(got) == len(mentions)
